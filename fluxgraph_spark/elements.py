@@ -151,16 +151,10 @@ class TimeAwareElement:
         row = self._row()
         if row is None:
             return None
-        history = self.graph._store.history(self.kind, self.id)
-        prev = None
-        for r in history:
-            if r["tx_from"] < row["tx_from"]:
-                prev = r
-            else:
-                break
-        if prev is None:
+        step = self.graph._store.chain_step(self.kind, self.id, row["tx_from"], False)
+        if step is None:
             return None
-        return self._wrap(prev["tx_from"])
+        return self._wrap(step[0]["tx_from"])
 
     def next_version(self) -> Optional["TimeAwareElement"]:
         """Successor version; if the successor is the latest (open) version
@@ -169,15 +163,11 @@ class TimeAwareElement:
         row = self._row()
         if row is None:
             return None
-        history = self.graph._store.history(self.kind, self.id)
-        nxt = None
-        for r in history:
-            if r["tx_from"] > row["tx_from"]:
-                nxt = r
-                break
-        if nxt is None:
+        step = self.graph._store.chain_step(self.kind, self.id, row["tx_from"], True)
+        if step is None:
             return None
-        if nxt is history[-1] and nxt["tx_to"] is None:
+        nxt, newest = step
+        if newest and nxt["tx_to"] is None:
             return self._wrap(None)
         return self._wrap(nxt["tx_from"])
 

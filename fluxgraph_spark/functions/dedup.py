@@ -21,6 +21,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..local_relation import local_dataframe
 from .text import TOKEN_RE, let_, stable_hash64
 
 
@@ -216,7 +217,9 @@ def shingle_array_table(
     df = spread(df)
     return df.select(
         F.col(id_col).alias("id"),
-        F.array_remove(F.array_distinct(grams), "").alias("shingles"),
+        F.filter(
+            F.array_distinct(grams), lambda g: g.isNotNull() & (g != F.lit(""))
+        ).alias("shingles"),
     ).where(F.size("shingles") > 0)
 
 
@@ -407,6 +410,19 @@ def jaccard_pairs(
     stage) and the strategy is left to AQE.  Candidate lists track
     near-dup density and can be too big to broadcast at corpus scale,
     hence the 1M-pair cutoff."""
+    return _jaccard_pairs(shingles, block, threshold, broadcast_block)[0]
+
+
+def _jaccard_pairs(
+    shingles: DataFrame,
+    block: DataFrame | None,
+    threshold: float,
+    broadcast_block: "bool | None",
+) -> "tuple[DataFrame, DataFrame | None]":
+    """:func:`jaccard_pairs` and the eager checkpoint its blocked verify
+    escapes through the lazy result (None unblocked), for callers that
+    free it once that result is materialized."""
+    arrs = None
     if block is not None:
         if broadcast_block is None:
             broadcast_block = block.is_cached and block.count() <= 1_000_000
@@ -425,7 +441,7 @@ def jaccard_pairs(
         # 3.5s -> 2.1s on the d_lsh_budget verify at sf0.1; the saving
         # is the whole second pass over the candidate shingles at
         # scale).  Escapes through the lazy result — blocks freed by
-        # the ContextCleaner with the result's lineage.
+        # the caller or by the ContextCleaner with the result's lineage.
         arrs = arrs.localCheckpoint(eager=True)
         out = (
             bcast(block)
@@ -469,7 +485,7 @@ def jaccard_pairs(
     )
     if threshold > 0:
         out = out.where(F.col("jaccard") >= threshold)
-    return out
+    return out, arrs
 
 
 def containment_pairs(
@@ -1307,97 +1323,112 @@ def minhash_lsh_dedup_reproducible(
         eager=True
     )
 
-    # the row/gram stats and the banding both read ONLY the checkpoint:
-    # run them as concurrent jobs (guide §2.6 overlap) — actions are
-    # sequential only because driver code calls them sequentially
-    def _stats():
-        row = arr.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.size("shingles")), F.lit(0)).alias("g"),
-        ).collect()[0]
-        return int(row["n"]), int(row["g"])
+    # every checkpoint and cache is released on the failure path too;
+    # the success paths free theirs once the result is materialized
+    checkpoints = [arr]
+    cached: list[DataFrame] = []
+    try:
+        # the row/gram stats and the banding both read ONLY the checkpoint:
+        # run them as concurrent jobs (guide §2.6 overlap) — actions are
+        # sequential only because driver code calls them sequentially
+        def _stats():
+            row = arr.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum(F.size("shingles")), F.lit(0)).alias("g"),
+            ).collect()[0]
+            return int(row["n"]), int(row["g"])
 
-    def _mk_banded():
-        # signatures via explode of the CHECKPOINTED arrays (the md5s
-        # stay in whole-stage codegen; inside HOF lambdas they run
-        # interpreted — measured 2x slower end to end); one
-        # materialization serves the driver collect OR both sides of
-        # the distributed self-join (the AQE twin-subtree trap)
-        sig = minhash_signatures(
-            arr.select("id", F.explode("shingles").alias("shingle")),
-            num_hashes=num_hashes,
-        )
-        b = band_table(sig, num_hashes=num_hashes, bands=bands)
-        b = b.localCheckpoint(eager=True)
-        return b, b.count()
+        def _mk_banded():
+            # signatures via explode of the CHECKPOINTED arrays (the md5s
+            # stay in whole-stage codegen; inside HOF lambdas they run
+            # interpreted — measured 2x slower end to end); one
+            # materialization serves the driver collect OR both sides of
+            # the distributed self-join (the AQE twin-subtree trap)
+            sig = minhash_signatures(
+                arr.select("id", F.explode("shingles").alias("shingle")),
+                num_hashes=num_hashes,
+            )
+            b = band_table(sig, num_hashes=num_hashes, bands=bands)
+            b = b.localCheckpoint(eager=True)
+            checkpoints.append(b)
+            return b, b.count()
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_stats = pool.submit(_stats)
-        f_band = pool.submit(_mk_banded)
-        n_rows, n_grams = f_stats.result()
-        banded, n_band = f_band.result()
-    if n_band != n_rows * bands:
-        # duplicate ids (sig's groupBy merged rows): the per-row array
-        # verify would be wrong — keep the exploded path's semantics
-        free_local_checkpoint(banded)
-        free_local_checkpoint(arr)
-        return _minhash_lsh_reproducible_exploded(
-            df, id_col, text_col, n, num_hashes, bands, threshold,
-            max_candidates_per_doc,
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_stats = pool.submit(_stats)
+            f_band = pool.submit(_mk_banded)
+            n_rows, n_grams = f_stats.result()
+            banded, n_band = f_band.result()
+        if n_band != n_rows * bands:
+            # duplicate ids (sig's groupBy merged rows): the per-row array
+            # verify would be wrong — keep the exploded path's semantics
+            free_local_checkpoint(banded)
+            free_local_checkpoint(arr)
+            return _minhash_lsh_reproducible_exploded(
+                df, id_col, text_col, n, num_hashes, bands, threshold,
+                max_candidates_per_doc,
+            )
+        spark = df.sparkSession
+        id_t = arr.schema["id"].dataType
+        # the candidate selection collect and the verify's gram collect are
+        # independent too — overlap them
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_pairs = pool.submit(
+                _banded_pairs_driver, banded, max_candidates_per_doc, n_band
+            )
+            f_tbl = (
+                pool.submit(arr.toArrow)
+                if n_grams <= _LSH_DRIVER_GRAMS_MAX
+                else None
+            )
+            pairs_local = f_pairs.result()
+            arr_tbl = f_tbl.result() if f_tbl is not None else None
+        if pairs_local is not None and arr_tbl is not None:
+            # everything after the banding fits the driver: verify the
+            # pairs in-process and return one small local relation
+            out = _jaccard_pairs_driver(
+                arr_tbl, pairs_local, threshold, id_t, spark
+            )
+            free_local_checkpoint(banded)
+            free_local_checkpoint(arr)
+            return out
+        if pairs_local is not None:
+            import pyspark.sql.types as T
+
+            schema = T.StructType(
+                [
+                    T.StructField("id_a", id_t, True),
+                    T.StructField("id_b", id_t, True),
+                ]
+            )
+            cand = local_dataframe(
+                spark, [[a for a, _ in pairs_local], [b for _, b in pairs_local]], schema
+            )
+            n_cand = len(pairs_local)
+        else:
+            if max_candidates_per_doc is None:
+                cand = pairs_from_bands(banded).persist()
+            else:
+                cand = _budgeted_pairs_from_bands(
+                    banded, max_candidates_per_doc
+                ).persist()
+            cached.append(cand)
+            n_cand = cand.count()
+        out = _jaccard_pairs_from_arrays(
+            arr, block=cand, threshold=threshold,
+            broadcast_block=n_cand <= 1_000_000,
         )
-    spark = df.sparkSession
-    id_t = arr.schema["id"].dataType
-    # the candidate selection collect and the verify's gram collect are
-    # independent too — overlap them
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_pairs = pool.submit(
-            _banded_pairs_driver, banded, max_candidates_per_doc, n_band
-        )
-        f_tbl = (
-            pool.submit(arr.toArrow)
-            if n_grams <= _LSH_DRIVER_GRAMS_MAX
-            else None
-        )
-        pairs_local = f_pairs.result()
-        arr_tbl = f_tbl.result() if f_tbl is not None else None
-    if pairs_local is not None and arr_tbl is not None:
-        # everything after the banding fits the driver: verify the
-        # pairs in-process and return one small local relation
-        out = _jaccard_pairs_driver(
-            arr_tbl, pairs_local, threshold, id_t, spark
-        )
+        out = out.localCheckpoint(eager=True)
+        if pairs_local is None:
+            cand.unpersist()
         free_local_checkpoint(banded)
         free_local_checkpoint(arr)
         return out
-    if pairs_local is not None:
-        import pyspark.sql.types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("id_a", id_t, True),
-                T.StructField("id_b", id_t, True),
-            ]
-        )
-        cand = spark.createDataFrame(pairs_local, schema)
-        n_cand = len(pairs_local)
-    else:
-        if max_candidates_per_doc is None:
-            cand = pairs_from_bands(banded).persist()
-        else:
-            cand = _budgeted_pairs_from_bands(
-                banded, max_candidates_per_doc
-            ).persist()
-        n_cand = cand.count()
-    out = _jaccard_pairs_from_arrays(
-        arr, block=cand, threshold=threshold,
-        broadcast_block=n_cand <= 1_000_000,
-    )
-    out = out.localCheckpoint(eager=True)
-    if pairs_local is None:
-        cand.unpersist()
-    free_local_checkpoint(banded)
-    free_local_checkpoint(arr)
-    return out
+    except BaseException:
+        for ck in checkpoints:
+            free_local_checkpoint(ck)
+        for c in cached:
+            c.unpersist()
+        raise
 
 
 # Bounded driver tier for LSH candidate selection (r13): past the
@@ -1446,7 +1477,7 @@ def _jaccard_pairs_driver(tbl, pairs_local, threshold, id_t, spark):
     ids = tbl.column("id").to_pylist()
     grams = tbl.column("shingles").to_pylist()
     bydoc = {i: set(g) for i, g in zip(ids, grams)}
-    rows = []
+    ids_a, ids_b, jaccards = [], [], []
     for a, b in pairs_local:
         sa = bydoc.get(a)
         sb = bydoc.get(b)
@@ -1458,7 +1489,9 @@ def _jaccard_pairs_driver(tbl, pairs_local, threshold, id_t, spark):
         jac = _round6_half_up(inter / (len(sa) + len(sb) - inter))
         if threshold > 0 and jac < threshold:
             continue
-        rows.append((a, b, jac))
+        ids_a.append(a)
+        ids_b.append(b)
+        jaccards.append(jac)
     schema = T.StructType(
         [
             T.StructField("id_a", id_t, True),
@@ -1466,7 +1499,7 @@ def _jaccard_pairs_driver(tbl, pairs_local, threshold, id_t, spark):
             T.StructField("jaccard", T.DoubleType(), True),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_dataframe(spark, [ids_a, ids_b, jaccards], schema)
 
 
 def _banded_pairs_driver(
@@ -2016,6 +2049,7 @@ def contamination_hits_bloom(
     shard count."""
     import numpy as np
     import pyarrow as pa
+    import pyspark.sql.types as T
 
     from .text import rolling_hashes
 
@@ -2066,9 +2100,8 @@ def contamination_hits_bloom(
     )
     words = _bloom_words(word_rows, n_shards, m)
     spark = probe.sparkSession
-    # hand Spark the buffer THROUGH ARROW (pa.Table is accepted natively
-    # by createDataFrame in Spark 4 regardless of the pandas-arrow
-    # conf): no per-element boxing on the way out either
+    # hand Spark the buffer THROUGH ARROW: no per-element boxing on the
+    # way out either
     n_words = m // 64
     # int64 offsets (LargeListArray): n_shards x n_words can pass 2^31
     # exactly in the sharded regime this parameter exists for (128
@@ -2080,11 +2113,18 @@ def contamination_hits_bloom(
         ),
         pa.array(words.ravel()),
     )
-    bits_df = spark.createDataFrame(
+    bits_df = local_dataframe(
+        spark,
         pa.table(
             {"shard": pa.array(np.arange(n_shards, dtype=np.int64)),
              "bits": bits_arr}
-        )
+        ),
+        T.StructType(
+            [
+                T.StructField("shard", T.LongType()),
+                T.StructField("bits", T.ArrayType(T.LongType())),
+            ]
+        ),
     )
     # the cached fingerprint set has served the count + the bitmap fold;
     # drop the pin so repeated calls don't accumulate executor storage —

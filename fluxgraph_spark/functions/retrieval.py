@@ -241,6 +241,12 @@ def bm25_topk(
     query does).  Returns ``(query_id, doc_id, score_micro, rank)``,
     rank ties broken by ``doc_id`` (deterministic).
 
+    ``doc_id`` must be unique in ``docs``.  The literal-array plan keeps
+    one row per input row while the broadcast-join plan used past
+    ``BM25_LITERAL_TERMS_MAX`` query terms groups by ``doc_id``, so rows
+    sharing an id would score differently depending on the query
+    vocabulary size.
+
     Plan shape (r12): ONE corpus scan computes, per document, the token
     count AND the query-term-matched tokens (the query-term set is
     bounded by contract — it already broadcast in the join form — so

@@ -17,6 +17,9 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..local_relation import local_dataframe
 
 
 def _as_double_vec(col: Column) -> Column:
@@ -821,9 +824,7 @@ def ivf_centroids_refined(
         )
         # each iteration's assignment collects the (tiny) centroid table;
         # pin the new centroids so lineage doesn't recompute the chain
-        cents = cents.sparkSession.createDataFrame(
-            cents.collect(), cents.schema
-        )
+        cents = local_dataframe(cents.sparkSession, cents.toArrow(), cents.schema)
     return cents
 
 
@@ -1250,7 +1251,7 @@ def pq_query_lut(
         F.col(query_id_col).alias("query_id"),
         _as_double_vec(F.col(vec_col)).alias("vec"),
     ).collect()
-    luts = []
+    qids, luts = [], []
     for r in q_rows:
         flat = []
         for s in range(m):
@@ -1260,11 +1261,15 @@ def pq_query_lut(
                 for x, y in zip(qsub, cvec):  # sequential fold = engine parity
                     d += (x - y) * (x - y)
                 flat.append(int(math.floor(d * 1_000_000 + 0.5)))
-        luts.append((r["query_id"], flat))
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    return queries.sparkSession.createDataFrame(
-        luts, f"query_id {qid_type}, lut array<bigint>"
+        qids.append(r["query_id"])
+        luts.append(flat)
+    schema = T.StructType(
+        [
+            T.StructField("query_id", queries.schema[query_id_col].dataType),
+            T.StructField("lut", T.ArrayType(T.LongType())),
+        ]
     )
+    return local_dataframe(queries.sparkSession, [qids, luts], schema)
 
 
 def pq_adc_column(m: int, ksub: int) -> Column:

@@ -406,12 +406,14 @@ class TemporalGraph:
                 if row is not None and (not labels or row["label"] in labels):
                     out.append(FluxSparkEdge(self, eid, vertex.pinned_tx))
         else:
-            for row in self._store.iter_visible(M.EDGE_KIND, tx):
-                hit = (direction in (OUT, BOTH) and row["src"] == vertex.id) or (
-                    direction in (IN, BOTH) and row["dst"] == vertex.id
-                )
-                if hit and (not labels or row["label"] in labels):
-                    out.append(FluxSparkEdge(self, row["id"], tx))
+            # historical snapshot: the vertex's all-time incident edges
+            ids = self._store.incident_edge_ids(
+                vertex.id, direction in (OUT, BOTH), direction in (IN, BOTH)
+            )
+            for eid in ids:
+                row = self._store.version_at(M.EDGE_KIND, eid, tx)
+                if row is not None and (not labels or row["label"] in labels):
+                    out.append(FluxSparkEdge(self, eid, tx))
         return out
 
     # ------------------------------------------------------------------ #

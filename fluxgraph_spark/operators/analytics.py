@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import model as M
+from ..local_relation import local_dataframe
 
 
 def _finish(df: DataFrame, handles, checkpointed: bool = False) -> DataFrame:
@@ -387,7 +388,8 @@ def connected_components(
         schema = T.StructType(
             [T.StructField(M.ID, id_t, True), T.StructField("component", id_t, True)]
         )
-        return spark.createDataFrame(sorted(comp_map.items()), schema)
+        ids = sorted(comp_map)
+        return local_dataframe(spark, [ids, [comp_map[i] for i in ids]], schema)
     # distinct + hash-partition by src once: each superstep's join reuses
     # the cached partitioning, shuffling only the (id, component) table.
     # Materialized eagerly — under AQE a lazy persist re-runs the whole
@@ -657,13 +659,12 @@ def _closeness_driver_tier(
             f"matching oracle's round count: converged rounds are "
             f"no-ops, so oversizing is always safe)"
         )
-    out_rows = []
-    for s, lev in zip(srcs, levs):
+    n_reached, sum_levels = [], []
+    for lev in levs:
         fin = lev != INF
-        n_reached = int(fin.sum())
-        sum_levels = int(lev[fin].sum())
-        cm = (n_reached - 1) * 1_000_000 // sum_levels if sum_levels > 0 else 0
-        out_rows.append((s, n_reached, sum_levels, cm))
+        n_reached.append(int(fin.sum()))
+        sum_levels.append(int(lev[fin].sum()))
+    cm = [(n - 1) * 1_000_000 // sl if sl > 0 else 0 for n, sl in zip(n_reached, sum_levels)]
     schema = T.StructType(
         [
             T.StructField("source", s_field.dataType, True),
@@ -672,7 +673,7 @@ def _closeness_driver_tier(
             T.StructField("closeness_micro", T.LongType(), True),
         ]
     )
-    return edges.sparkSession.createDataFrame(out_rows, schema)
+    return local_dataframe(edges.sparkSession, [srcs, n_reached, sum_levels, cm], schema)
 
 
 def closeness_centrality(
@@ -895,7 +896,8 @@ def connected_components_star(
                 T.StructField("component", T.LongType(), True),
             ]
         )
-        return spark.createDataFrame(sorted(comp_map.items()), schema)
+        ids = sorted(comp_map)
+        return local_dataframe(spark, [ids, [comp_map[i] for i in ids]], schema)
     e = (
         edges.select(
             F.col(M.SRC).cast("long").alias("u"),
@@ -1555,7 +1557,7 @@ def random_walks(
     if bounded is not None:
         pairs, seeds, schema = bounded
         adj = _walk_adjacency(pairs)
-        out_rows = []
+        walk_ids, paths, finals = [], [], []
         for wid in seeds:
             v = wid
             path = str(wid)
@@ -1568,8 +1570,10 @@ def random_walks(
                 v = nbrs[_stable_hash64_py(f"{wid}:{t}:{v}") % len(nbrs)]
                 path += f"->{v}"
             if alive:
-                out_rows.append((wid, path, v))
-        return edges.sparkSession.createDataFrame(out_rows, schema)
+                walk_ids.append(wid)
+                paths.append(path)
+                finals.append(v)
+        return local_dataframe(edges.sparkSession, [walk_ids, paths, finals], schema)
     from ..functions.text import stable_hash64
 
     from pyspark.sql import Window as W
@@ -1709,7 +1713,7 @@ def node2vec_walks(
         pairs, seeds, schema = bounded
         adj = _walk_adjacency(pairs, max_degree=max_degree)
         adj_set = {u: frozenset(vs) for u, vs in adj.items()}
-        out_rows = []
+        walk_ids, paths, finals = [], [], []
         for wid in seeds:
             v = wid
             nbrs = adj.get(v)
@@ -1742,8 +1746,10 @@ def node2vec_walks(
                         path += f"->{x}"
                         break
             if alive:
-                out_rows.append((wid, path, v))
-        return edges.sparkSession.createDataFrame(out_rows, schema)
+                walk_ids.append(wid)
+                paths.append(path)
+                finals.append(v)
+        return local_dataframe(edges.sparkSession, [walk_ids, paths, finals], schema)
 
     from ..functions.text import stable_hash64
 

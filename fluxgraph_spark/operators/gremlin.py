@@ -78,8 +78,10 @@ from typing import Any, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import model as M
+from ..local_relation import local_dataframe
 from .fluent import Traversal
 
 
@@ -772,8 +774,6 @@ def _tier_collect_graph(vertices: DataFrame, edges: DataFrame):
     v, e = vertices, edges
     if M.ID not in v.columns or not {M.SRC, M.DST, M.LABEL} <= set(e.columns):
         return None
-    import pyspark.sql.types as T
-
     integral = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
     if not isinstance(v.schema[M.ID].dataType, integral):
         return None
@@ -984,6 +984,9 @@ def _tier_run_loop(lf, idx, section, while_conds, emit_conds, max_loops):
 
 # one explode row never materializes an array over this many elements
 _TIER_CNT_CHUNK = 1 << 16
+_TIER_CNT_SCHEMA = T.StructType(
+    [T.StructField("__tier_id", T.LongType()), T.StructField("__tier_cnt", T.LongType())]
+)
 
 
 def _tier_materialize(lf, all_idx, vertices: DataFrame):
@@ -999,15 +1002,15 @@ def _tier_materialize(lf, all_idx, vertices: DataFrame):
     spark = vertices.sparkSession
     uniq, counts = np.unique(all_idx, return_counts=True)
     ids = lf.vids[uniq]
-    rows = []
+    tier_ids, tier_cnts = [], []
     for vid, cnt in zip(ids.tolist(), counts.tolist()):
         while cnt > _TIER_CNT_CHUNK:
-            rows.append((vid, _TIER_CNT_CHUNK))
+            tier_ids.append(vid)
+            tier_cnts.append(_TIER_CNT_CHUNK)
             cnt -= _TIER_CNT_CHUNK
-        rows.append((vid, cnt))
-    cnt_df = spark.createDataFrame(
-        rows, schema="__tier_id long, __tier_cnt long"
-    )
+        tier_ids.append(vid)
+        tier_cnts.append(cnt)
+    cnt_df = local_dataframe(spark, [tier_ids, tier_cnts], _TIER_CNT_SCHEMA)
     out = (
         vertices.join(
             F.broadcast(cnt_df),

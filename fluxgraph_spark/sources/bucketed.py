@@ -38,9 +38,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dedup import (
+    _jaccard_pairs,
     band_table,
     free_local_checkpoint,
-    jaccard_pairs,
     minhash_signatures,
     pairs_from_bands,
     shingle_table,
@@ -320,120 +320,127 @@ class DedupIndex:
         # scans of the same small batch — materialize them as
         # CONCURRENT jobs (guide §2.6: actions are sequential only
         # because driver code calls them sequentially).
-        sh_batch = shingle_table(base, "id", "text", n=self.n).persist()
-        sig = minhash_signatures(sh_batch, num_hashes=self.num_hashes)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_h = pool.submit(
-                lambda: base.select(
-                    "id", stable_hash64(F.col("text")).alias("h")
-                ).localCheckpoint(eager=True)
-            )
-            f_b = pool.submit(
-                lambda: band_table(
-                    sig, num_hashes=self.num_hashes, bands=self.bands
-                ).localCheckpoint(eager=True)
-            )
-            b_hashes = f_h.result()
-            b_bands = f_b.result()
+        # Every cache and checkpoint of the batch is released when the
+        # call ends, on failure too, and only after both pools have
+        # joined (ADVICE r12: a long-lived streaming session calls
+        # dedupe_batch per microbatch and would otherwise accumulate the
+        # blocks).  On success that is after ``drops`` materializes: an
+        # evicted cand cache would recompute through them.
+        cached: list[DataFrame] = []
+        futures = []
+        verify_ck = None
+        try:
+            sh_batch = shingle_table(base, "id", "text", n=self.n).persist()
+            cached.append(sh_batch)
+            sig = minhash_signatures(sh_batch, num_hashes=self.num_hashes)
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                futures.append(pool.submit(
+                    lambda: base.select(
+                        "id", stable_hash64(F.col("text")).alias("h")
+                    ).localCheckpoint(eager=True)
+                ))
+                futures.append(pool.submit(
+                    lambda: band_table(
+                        sig, num_hashes=self.num_hashes, bands=self.bands
+                    ).localCheckpoint(eager=True)
+                ))
+                b_hashes, b_bands = (f.result() for f in futures)
 
-        # exact tier: corpus hash hit, or smaller-id twin within batch.
-        # The id inequality makes the probe replay-safe: a crashed-and-
-        # replayed microbatch finds its own previous fingerprints in the
-        # index (same ids), and without it every replayed doc would
-        # self-match and drop.  Real corpus twins always carry other ids.
-        hn = b_hashes.alias("hn")
-        exact_corpus = hn.join(
-            self.hashes().alias("ho"),
-            (F.col("hn.h") == F.col("ho.h")) & (F.col("hn.id") != F.col("ho.id")),
-            "left_semi",
-        ).select(F.col("hn.id").alias("id"))
-        hb = b_hashes.alias("hb")
-        exact_batch = (
-            hn.join(
-                hb,
-                (F.col("hn.h") == F.col("hb.h")) & (F.col("hb.id") < F.col("hn.id")),
+            # exact tier: corpus hash hit, or smaller-id twin within batch.
+            # The id inequality makes the probe replay-safe: a crashed-and-
+            # replayed microbatch finds its own previous fingerprints in the
+            # index (same ids), and without it every replayed doc would
+            # self-match and drop.  Real corpus twins always carry other ids.
+            hn = b_hashes.alias("hn")
+            exact_corpus = hn.join(
+                self.hashes().alias("ho"),
+                (F.col("hn.h") == F.col("ho.h")) & (F.col("hn.id") != F.col("ho.id")),
                 "left_semi",
-            )
-        ).select(F.col("hn.id").alias("id"))
-        exact_drop = exact_corpus.unionByName(exact_batch).distinct()
-        # the exact tier probes only the hash index — independent of
-        # the banding joins below: materialize it concurrently with the
-        # candidate count so its probe hides under the bigger job
-        exact_pool = ThreadPoolExecutor(max_workers=1)
-        f_exact = exact_pool.submit(
-            lambda: exact_drop.localCheckpoint(eager=True)
-        )
+            ).select(F.col("hn.id").alias("id"))
+            hb = b_hashes.alias("hb")
+            exact_batch = (
+                hn.join(
+                    hb,
+                    (F.col("hn.h") == F.col("hb.h")) & (F.col("hb.id") < F.col("hn.id")),
+                    "left_semi",
+                )
+            ).select(F.col("hn.id").alias("id"))
+            exact_drop = exact_corpus.unionByName(exact_batch).distinct()
+            # the exact tier probes only the hash index — independent of
+            # the banding joins below: materialize it concurrently with the
+            # candidate count so its probe hides under the bigger job
+            with ThreadPoolExecutor(max_workers=1) as exact_pool:
+                futures.append(exact_pool.submit(
+                    lambda: exact_drop.localCheckpoint(eager=True)
+                ))
 
-        # near tier: batch bands vs index bands + smaller-id batch bands
-        bn = b_bands.alias("bn")
-        cand_corpus = (
-            bn.join(
-                self.bands_df().alias("bo"),
-                (F.col("bn.band") == F.col("bo.band"))
-                & (F.col("bn.bucket") == F.col("bo.bucket"))
-                # replay-safe: see the exact tier above
-                & (F.col("bn.id") != F.col("bo.id")),
-            )
-            .select(F.col("bn.id").alias("id_a"), F.col("bo.id").alias("id_b"))
-        )
-        bb = b_bands.alias("bb")
-        cand_batch = (
-            bn.join(
-                bb,
-                (F.col("bn.band") == F.col("bb.band"))
-                & (F.col("bn.bucket") == F.col("bb.bucket"))
-                & (F.col("bb.id") < F.col("bn.id")),
-            )
-            .select(F.col("bn.id").alias("id_a"), F.col("bb.id").alias("id_b"))
-        )
-        # eager count: materializes the banding joins ONCE here (instead
-        # of lazily inside jaccard_pairs' broadcast probe — one less AQE
-        # replan surface, same fix as dedup.py's minhash entry point) and
-        # sizes the explicit broadcast decision below.
-        cand = cand_corpus.unionByName(cand_batch).dropDuplicates().persist()
-        n_cand = cand.count()
+                # near tier: batch bands vs index bands + smaller-id batch bands
+                bn = b_bands.alias("bn")
+                cand_corpus = (
+                    bn.join(
+                        self.bands_df().alias("bo"),
+                        (F.col("bn.band") == F.col("bo.band"))
+                        & (F.col("bn.bucket") == F.col("bo.bucket"))
+                        # replay-safe: see the exact tier above
+                        & (F.col("bn.id") != F.col("bo.id")),
+                    )
+                    .select(F.col("bn.id").alias("id_a"), F.col("bo.id").alias("id_b"))
+                )
+                bb = b_bands.alias("bb")
+                cand_batch = (
+                    bn.join(
+                        bb,
+                        (F.col("bn.band") == F.col("bb.band"))
+                        & (F.col("bn.bucket") == F.col("bb.bucket"))
+                        & (F.col("bb.id") < F.col("bn.id")),
+                    )
+                    .select(F.col("bn.id").alias("id_a"), F.col("bb.id").alias("id_b"))
+                )
+                # eager count: materializes the banding joins ONCE here
+                # (instead of lazily inside jaccard_pairs' broadcast probe —
+                # one less AQE replan surface, same fix as dedup.py's
+                # minhash entry point) and sizes the explicit broadcast
+                # decision below.
+                cand = cand_corpus.unionByName(cand_batch).dropDuplicates().persist()
+                cached.append(cand)
+                n_cand = cand.count()
 
-        # verify tier: shingle ONLY the batch + the colliding corpus docs
-        hit_ids = (
-            cand.select(F.col("id_b").alias("id"))
-            .distinct()
-            .join(base.select("id"), "id", "left_anti")
-        )
-        corpus_hits = corpus_docs.select(
-            F.col(id_col).alias("id"), F.col(text_col).alias("text")
-        ).join(hit_ids, "id", "left_semi")
-        # jaccard_pairs consumes the shingles three times (sizes agg +
-        # both join sides); the batch half comes from the CACHED batch
-        # shingle table (jaccard_pairs' candidate-id semi-join drops the
-        # non-candidate batch rows exactly as the old
-        # shingle_table(batch ∪ hits) form did)
-        sh = sh_batch.unionByName(
-            shingle_table(corpus_hits, "id", "text", n=self.n)
-        ).persist()
-        verified = jaccard_pairs(
-            sh, block=cand, threshold=threshold,
-            broadcast_block=n_cand <= 1_000_000,
-        )
-        near_drop = verified.select(F.col("id_a").alias("id")).distinct()
+                # verify tier: shingle ONLY the batch + the colliding corpus docs
+                hit_ids = (
+                    cand.select(F.col("id_b").alias("id"))
+                    .distinct()
+                    .join(base.select("id"), "id", "left_anti")
+                )
+                corpus_hits = corpus_docs.select(
+                    F.col(id_col).alias("id"), F.col(text_col).alias("text")
+                ).join(hit_ids, "id", "left_semi")
+                # jaccard_pairs consumes the shingles three times (sizes agg
+                # + both join sides); the batch half comes from the CACHED
+                # batch shingle table (jaccard_pairs' candidate-id semi-join
+                # drops the non-candidate batch rows exactly as the old
+                # shingle_table(batch ∪ hits) form did)
+                sh = sh_batch.unionByName(
+                    shingle_table(corpus_hits, "id", "text", n=self.n)
+                ).persist()
+                cached.append(sh)
+                verified, verify_ck = _jaccard_pairs(
+                    sh, cand, threshold, n_cand <= 1_000_000
+                )
+                near_drop = verified.select(F.col("id_a").alias("id")).distinct()
+                exact_ck = futures[-1].result()
 
-        exact_ck = f_exact.result()
-        exact_pool.shutdown()
-        drops = (
-            exact_ck.unionByName(near_drop)
-            .distinct()
-            .withColumnRenamed("id", id_col)
-        )
-        drops = drops.localCheckpoint(eager=True)
-        free_local_checkpoint(exact_ck)
-        cand.unpersist()
-        sh.unpersist()
-        sh_batch.unpersist()
-        # per-batch fingerprint checkpoints die with the batch — freed
-        # here (after drops materializes: an evicted cand cache would
-        # recompute through them), not left to the ContextCleaner; a
-        # long-lived streaming session calls dedupe_batch per
-        # microbatch and would otherwise accumulate the blocks
-        # (ADVICE r12)
-        free_local_checkpoint(b_hashes)
-        free_local_checkpoint(b_bands)
+            drops = (
+                exact_ck.unionByName(near_drop)
+                .distinct()
+                .withColumnRenamed("id", id_col)
+            )
+            drops = drops.localCheckpoint(eager=True)
+        finally:
+            for f in futures:
+                if f.done() and f.exception() is None:
+                    free_local_checkpoint(f.result())
+            if verify_ck is not None:
+                free_local_checkpoint(verify_ck)
+            for df in cached:
+                df.unpersist()
         return new_batch.join(drops, id_col, "left_anti")

@@ -639,10 +639,14 @@ def write_graph_distributed(
         }
         max_sub = max(n_sub.values(), default=1)
         if max_sub > 1:
-            spark = vertices.sparkSession
+            from ..local_relation import local_dataframe
+
+            fan_schema = T.StructType(
+                [T.StructField("__shard", T.LongType()), T.StructField("__nsub", T.IntegerType())]
+            )
             fan = F.broadcast(
-                spark.createDataFrame(
-                    [(s, k) for s, k in n_sub.items()], "__shard bigint, __nsub int"
+                local_dataframe(
+                    vertices.sparkSession, [list(n_sub), list(n_sub.values())], fan_schema
                 )
             )
             # final shard ids stay distinct: sub < max_sub per shard

@@ -44,10 +44,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..local_relation import local_dataframe
 from . import fsutil
 
 _MANIFEST = "_manifest.json"
 _BUCKET_COL = "__bucket"
+# one audit row per committed version, under txlog/v=<version>
+_TXLOG_SCHEMA = T.StructType(
+    [
+        T.StructField("committed_at", T.TimestampNTZType()),
+        T.StructField("n_changes", T.LongType()),
+        T.StructField("n_buckets_rewritten", T.LongType()),
+        T.StructField("n_rows_written", T.LongType()),
+    ]
+)
 
 
 class Scd2ParquetTable:
@@ -190,11 +200,14 @@ class Scd2ParquetTable:
         if not paths:
             raise ValueError(f"no committed data at {self.path}")
         committed = self.spark.read.parquet(paths[0])
-        kdf = self.spark.createDataFrame(
-            self._key_tuples(keys), ", ".join(
-                f"{c} {committed.schema[c].dataType.simpleString()}"
-                for c in self.key_cols
-            )
+        key_schema = T.StructType(
+            [T.StructField(c, committed.schema[c].dataType) for c in self.key_cols]
+        )
+        tuples = self._key_tuples(keys)
+        kdf = local_dataframe(
+            self.spark,
+            [[kt[i] for kt in tuples] for i in range(len(self.key_cols))],
+            key_schema,
         )
         return {
             r[0]
@@ -547,17 +560,10 @@ class Scd2ParquetTable:
             "n_buckets_rewritten": len(affected),
             "n_rows_written": n_staged,
         }
-        self.spark.createDataFrame(
-            [
-                (
-                    committed_at.replace(tzinfo=None),
-                    n_changes,
-                    len(affected),
-                    n_staged,
-                )
-            ],
-            "committed_at timestamp_ntz, n_changes long, "
-            "n_buckets_rewritten long, n_rows_written long",
+        local_dataframe(
+            self.spark,
+            [[committed_at.replace(tzinfo=None)], [n_changes], [len(affected)], [n_staged]],
+            _TXLOG_SCHEMA,
         ).write.mode("overwrite").parquet(
             os.path.join(self.path, "txlog", f"v={vid}")
         )

@@ -9,18 +9,31 @@ Spark DataFrames lazily for the *read/analytics path* — the scale story
 for writes at 100 TB is the batch path (`TemporalGraph.from_dataframes` /
 `operators.temporal.scd2_upsert`), not one-vertex-at-a-time CRUD.
 
-DataFrames are rebuilt only when the store has mutated since the last
-build (generation counter), so repeated reads are free.
+Time-travel reads are indexed, so they cost what the answer touches:
+
+* per element, the row positions and their ``tx_from`` values (append
+  order == tx order): ``version_at`` reads the newest row for the current
+  snapshot and bisects for a pinned one, and chain steps move one
+  position;
+* per vertex, every edge ever incident, besides the open-edge adjacency:
+  an as-of ``get_edges`` checks only the vertex's own edges.
+
+DataFrames are Arrow local relations (``local_relation.local_dataframe``:
+a ``LocalTableScan``, no Python worker per action), rebuilt only when the
+store has mutated since the last build (generation counter), so repeated
+reads are free.
 """
 
 from __future__ import annotations
 
 import datetime
+from bisect import bisect_left, bisect_right
 from typing import Any, Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 from . import model as M
+from .local_relation import local_dataframe
 
 
 class RowVersion(dict):
@@ -29,16 +42,27 @@ class RowVersion(dict):
 
 
 class LocalStore:
+    """Rows per kind in append order.  An element's rows are appended in
+    tx order, and a row is closed only while it is the element's newest,
+    at the tx that opens the next row or deletes the element — so at any
+    tx only the newest row with ``tx_from <= tx`` can be visible."""
+
     def __init__(self) -> None:
         self.vertices: list[RowVersion] = []
         self.edges: list[RowVersion] = []
         self.tx_log: list[dict[str, Any]] = []
-        # index: element id -> list of row indices (append order == tx order)
+        # element id -> row indices (append order == tx order), and the
+        # tx_from of each of those rows; keys in first-appearance order
         self._v_index: dict[int, list[int]] = {}
         self._e_index: dict[int, list[int]] = {}
+        self._v_tx_from: dict[int, list[int]] = {}
+        self._e_tx_from: dict[int, list[int]] = {}
         # adjacency over *currently open* edges: vertex id -> set of edge ids
         self._out: dict[int, set[int]] = {}
         self._in: dict[int, set[int]] = {}
+        # every edge ever incident: vertex id -> edge ids, first-appearance order
+        self._out_all: dict[int, list[int]] = {}
+        self._in_all: dict[int, list[int]] = {}
         self._next_id = 1
         self._next_tx = 1
         self.generation = 0
@@ -70,28 +94,58 @@ class LocalStore:
     def _index(self, kind: str) -> dict[int, list[int]]:
         return self._v_index if kind == M.VERTEX_KIND else self._e_index
 
+    def _tx_from(self, kind: str) -> dict[int, list[int]]:
+        return self._v_tx_from if kind == M.VERTEX_KIND else self._e_tx_from
+
     def history(self, kind: str, element_id: int) -> list[RowVersion]:
         rows = self._rows(kind)
         return [rows[i] for i in self._index(kind).get(element_id, [])]
 
     def version_at(self, kind: str, element_id: int, tx: Optional[int]) -> Optional[RowVersion]:
-        """Visible version at snapshot ``tx`` (None = current)."""
-        for row in reversed(self.history(kind, element_id)):
-            if tx is None:
-                if row["tx_to"] is None:
-                    return row
-                return None  # newest row closed => deleted
-            if row["tx_from"] <= tx and (row["tx_to"] is None or row["tx_to"] > tx):
-                return row
-        return None
+        """Visible version at snapshot ``tx`` (None = current): the newest
+        row if it is open, else the newest row opened at or before ``tx``
+        if it is still open at ``tx``."""
+        idxs = self._index(kind).get(element_id)
+        if not idxs:
+            return None
+        rows = self._rows(kind)
+        if tx is None:
+            row = rows[idxs[-1]]
+            return row if row["tx_to"] is None else None  # closed => deleted
+        k = bisect_right(self._tx_from(kind)[element_id], tx) - 1
+        if k < 0:
+            return None
+        row = rows[idxs[k]]
+        return row if row["tx_to"] is None or row["tx_to"] > tx else None
+
+    def chain_step(
+        self, kind: str, element_id: int, tx_from: int, forward: bool
+    ) -> Optional[tuple[RowVersion, bool]]:
+        """The row after (``forward``) or before the version opened at
+        ``tx_from`` in the element's chain, and whether it is the newest
+        row; None at either end."""
+        txs = self._tx_from(kind).get(element_id, [])
+        k = bisect_right(txs, tx_from) if forward else bisect_left(txs, tx_from) - 1
+        if not 0 <= k < len(txs):
+            return None
+        return self._rows(kind)[self._index(kind)[element_id][k]], k == len(txs) - 1
 
     def append_version(self, kind: str, row: RowVersion) -> None:
         rows = self._rows(kind)
-        self._index(kind).setdefault(row["id"], []).append(len(rows))
+        eid = row["id"]
+        idxs = self._index(kind).get(eid)
+        if idxs is None:
+            idxs = self._index(kind)[eid] = []
+            self._tx_from(kind)[eid] = []
+            if kind == M.EDGE_KIND:
+                self._out_all.setdefault(row["src"], []).append(eid)
+                self._in_all.setdefault(row["dst"], []).append(eid)
+        idxs.append(len(rows))
+        self._tx_from(kind)[eid].append(row["tx_from"])
         rows.append(row)
         if kind == M.EDGE_KIND:
-            self._out.setdefault(row["src"], set()).add(row["id"])
-            self._in.setdefault(row["dst"], set()).add(row["id"])
+            self._out.setdefault(row["src"], set()).add(eid)
+            self._in.setdefault(row["dst"], set()).add(eid)
 
     def close_version(self, kind: str, element_id: int, tx: int) -> Optional[RowVersion]:
         row = self.version_at(kind, element_id, None)
@@ -121,24 +175,33 @@ class LocalStore:
             }
         )
 
-    # -- adjacency (current snapshot only; historical reads go via rows) ----
+    # -- adjacency ----------------------------------------------------------
 
     def out_edge_ids(self, vertex_id: int) -> set[int]:
+        """Open out-edges (current snapshot)."""
         return self._out.get(vertex_id, set())
 
     def in_edge_ids(self, vertex_id: int) -> set[int]:
         return self._in.get(vertex_id, set())
 
+    def incident_edge_ids(self, vertex_id: int, outgoing: bool, incoming: bool) -> list[int]:
+        """Every edge ever incident to the vertex as its source and/or
+        target, in first-appearance order; a self-loop once.  Historical
+        reads filter these with ``version_at``."""
+        outs = self._out_all.get(vertex_id, []) if outgoing else []
+        ins = self._in_all.get(vertex_id, []) if incoming else []
+        if not (outs and ins):
+            return list(outs or ins)
+        first_row = self._e_index
+        return sorted(set(outs).union(ins), key=lambda e: first_row[e][0])
+
     # -- iteration ----------------------------------------------------------
 
     def iter_visible(self, kind: str, tx: Optional[int]) -> Iterator[RowVersion]:
-        seen: set[int] = set()
-        for row in self._rows(kind):
-            if row["id"] in seen:
-                continue
-            vis = self.version_at(kind, row["id"], tx)
+        """Visible versions at ``tx``, in element first-appearance order."""
+        for eid in list(self._index(kind)):
+            vis = self.version_at(kind, eid, tx)
             if vis is not None:
-                seen.add(row["id"])
                 yield vis
 
     # -- property columns ---------------------------------------------------
@@ -159,15 +222,14 @@ class LocalStore:
         props = self.prop_columns(kind)
         if kind == M.VERTEX_KIND:
             schema = M.vertex_schema(props)
-            base = (M.ID, M.TX_FROM, M.TX_TO)
+            base = M.VERTEX_BASE_COLS
         else:
             schema = M.edge_schema(props)
-            base = (M.ID, M.SRC, M.DST, M.LABEL, M.TX_FROM, M.TX_TO)
-        data = [
-            tuple(row[b] for b in base) + tuple(row["props"].get(c) for c in props)
-            for row in self._rows(kind)
-        ]
-        df = spark.createDataFrame(data, schema=schema)
+            base = M.EDGE_BASE_COLS
+        rows = self._rows(kind)
+        columns = [[row[b] for row in rows] for b in base]
+        columns += [[row["props"].get(c) for row in rows] for c in props]
+        df = local_dataframe(spark, columns, schema)
         self._df_cache[kind] = (self.generation, df)
         return df
 
@@ -175,10 +237,7 @@ class LocalStore:
         cached = self._df_cache.get("tx_log")
         if cached is not None and cached[0] == self.generation:
             return cached[1]
-        data = [
-            (r["tx_id"], r["tx_time"], r["element_id"], r["prev_tx_id"], r["kind"])
-            for r in self.tx_log
-        ]
-        df = spark.createDataFrame(data, schema=M.TX_LOG_SCHEMA)
+        columns = [[r[f] for r in self.tx_log] for f in M.TX_LOG_SCHEMA.names]
+        df = local_dataframe(spark, columns, M.TX_LOG_SCHEMA)
         self._df_cache["tx_log"] = (self.generation, df)
         return df

@@ -120,6 +120,42 @@ def test_dedupe_batch_frees_batch_checkpoints(spark, index):
     assert n_cached() - before <= 1
 
 
+def test_dedupe_batch_releases_resources_on_failure(spark, index, monkeypatch):
+    """A failure in the near tier, while the exact tier's checkpoint job
+    runs on its pool thread, must leave no pool thread alive and no
+    cached or checkpointed block of the batch behind."""
+    import threading
+    import time
+
+    idx, corpus, batch = index
+    sc = spark.sparkContext
+
+    def cached_ids():
+        return {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
+
+    def pool_threads():
+        return {
+            t for t in threading.enumerate()
+            if t.name.startswith("ThreadPoolExecutor")
+        }
+
+    def fail(*_args, **_kwargs):
+        raise RuntimeError("injected verify failure")
+
+    monkeypatch.setattr(bucketed, "_jaccard_pairs", fail)
+    threads_before = pool_threads()
+    before = cached_ids()
+    with pytest.raises(RuntimeError, match="injected verify failure"):
+        idx.dedupe_batch(batch, corpus, "doc_id", "text", threshold=0.5)
+    assert pool_threads() <= threads_before
+    # unpersist/free are non-blocking: poll briefly.  Compare ids, not
+    # counts: earlier tests' blocks may be cleaned up meanwhile
+    deadline = time.time() + 15
+    while cached_ids() - before and time.time() < deadline:
+        time.sleep(0.2)
+    assert not cached_ids() - before
+
+
 def test_free_local_checkpoint_releases_blocks(spark):
     import time
 

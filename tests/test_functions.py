@@ -1779,8 +1779,14 @@ def test_lsh_driver_tiers_match_distributed(tables, spark, monkeypatch):
     (numpy candidate selection + in-process Jaccard verify) are
     bit-identical to the distributed joins, with and without the
     per-doc budget, at every cap combination — and duplicate ids fall
-    back to the exploded implementation with unchanged results."""
-    docs = tables["documents"]
+    back to the exploded implementation with unchanged results.  NULL
+    text has no grams: two NULL-text docs are never a pair."""
+    docs = tables["documents"].select("doc_id", "text")
+    max_id = docs.agg(F.max("doc_id")).first()[0]
+    null_ids = [max_id + 1, max_id + 2]
+    docs = docs.unionByName(
+        spark.createDataFrame([(i, None) for i in null_ids], docs.schema)
+    )
 
     def run(budget):
         return sorted(map(tuple, dedup.minhash_lsh_dedup_reproducible(
@@ -1805,13 +1811,16 @@ def test_lsh_driver_tiers_match_distributed(tables, spark, monkeypatch):
             docs, "doc_id", "text", 2, 8, 8, 0.0, budget,
         ).collect()))
         assert all_driver == exploded, budget
+        assert not any(a in null_ids or b in null_ids for a, b, _ in all_driver)
 
-    # duplicate ids: union-of-grams semantics via the exploded fallback
-    from pyspark.sql import functions as F
-
-    dup = docs.limit(20).unionByName(
-        docs.limit(5).withColumn("text", F.concat(F.col("text"), F.lit(" zq")))
-    )
+    # duplicate ids: union-of-grams semantics via the exploded fallback;
+    # a NULL-text duplicate adds no grams to its id
+    head = docs.orderBy("doc_id").limit(20)
+    dup = head.unionByName(
+        head.limit(5).withColumn("text", F.concat(F.col("text"), F.lit(" zq")))
+    ).unionByName(
+        head.limit(2).withColumn("text", F.lit(None).cast("string"))
+    ).unionByName(docs.where(F.col("doc_id").isin(null_ids)))
     got = sorted(map(tuple, dedup.minhash_lsh_dedup_reproducible(
         dup, "doc_id", "text", n=2, num_hashes=8, bands=8, threshold=0.0,
     ).collect()))

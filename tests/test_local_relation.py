@@ -1,0 +1,192 @@
+"""The Arrow local-relation helper (local_relation.local_dataframe):
+values identical to what a python-list ``createDataFrame`` made of the
+same data, plans without a Python RDD, and no way around it."""
+
+import ast
+import datetime
+import decimal
+import os
+import time
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+import fluxgraph_spark
+from fluxgraph_spark import TemporalGraph
+from fluxgraph_spark import model as M
+from fluxgraph_spark.functions import dedup
+from fluxgraph_spark.local_relation import local_dataframe
+from fluxgraph_spark.operators import analytics as AN
+
+SAMPLES = {
+    # type suffix -> a few values; None is added to every column
+    "string": ["x", "", "ünï"],
+    "boolean": [True, False, True],
+    "long": [2**62, -1, 0],
+    "bigint": [decimal.Decimal(2**100), decimal.Decimal(-(10**37)), decimal.Decimal(0)],
+    "float": [0.1, 1e30, -2.5],
+    "double": [1e300, -0.0, 0.1],
+    "bigdec": [
+        decimal.Decimal(0.1),  # 55 fractional digits: rounded to 18
+        decimal.Decimal("1.0000000000000000005"),
+        decimal.Decimal("-1.0000000000000000015"),
+    ],
+    "uuid": [str(uuid.UUID(int=7)), str(uuid.UUID(int=8)), str(uuid.UUID(int=9))],
+    "uri": ["http://a/b", "urn:x", "file:///c"],
+}
+
+
+def plan_and_lineage(df):
+    qe = df._jdf.queryExecution()
+    return qe.executedPlan().toString() + qe.toRdd().toDebugString()
+
+
+def assert_no_python_rdd(df):
+    text = plan_and_lineage(df)
+    assert "ExistingRDD" not in text and "PythonRDD" not in text, text
+
+
+@pytest.fixture
+def process_zone(monkeypatch):
+    """A process-local zone (New York) that differs from the session zone
+    (UTC, then Kolkata) — naive datetimes are read in the process zone."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_every_property_type_round_trips_with_nulls(spark):
+    cols = [M.mangle("p", suffix) for suffix in SAMPLES]
+    schema = T.StructType(
+        [T.StructField(c, M.property_spark_type(c), True) for c in cols]
+    )
+    columns = [vals + [None] for vals in SAMPLES.values()]
+    rows = list(zip(*columns))
+    want = spark.createDataFrame(rows, schema).collect()
+    got = local_dataframe(spark, columns, schema)
+    assert got.collect() == want
+    assert_no_python_rdd(got)
+
+    # the same values through the store's vertex view
+    g = TemporalGraph.create(spark)
+    for i in range(len(rows)):
+        v = g.add_vertex()
+        for suffix, vals in SAMPLES.items():
+            if i < len(vals):
+                v.set_property("p" + suffix, vals[i], suffix)
+    view = g.vertices_df(snapshot=False)
+    store_rows = g._store.vertices
+    names = view.columns
+    list_rows = [
+        tuple(r[c] if c in M.VERTEX_BASE_COLS else r["props"].get(c) for c in names)
+        for r in store_rows
+    ]
+    assert view.collect() == spark.createDataFrame(list_rows, view.schema).collect()
+
+
+def test_tx_log_timestamps_match_list_path_across_zones(spark, process_zone):
+    old_zone = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for zone in ("UTC", "Asia/Kolkata"):
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            g = TemporalGraph.create(spark)
+            # naive times, one in each DST regime of the process zone
+            for t in (datetime.datetime(2020, 1, 1, 12, 0, 0, 123456),
+                      datetime.datetime(2020, 7, 1, 0, 30)):
+                g.set_transaction_time(t)
+                g.add_vertex()
+            got = g.tx_log_df()
+            want = spark.createDataFrame(
+                [tuple(r[f] for f in M.TX_LOG_SCHEMA.names) for r in g._store.tx_log],
+                M.TX_LOG_SCHEMA,
+            )
+            probe = [F.col(M.TX_TIME).cast("string"), F.unix_micros(M.TX_TIME)]
+            assert got.select(*probe).collect() == want.select(*probe).collect(), zone
+            assert got.collect() == want.collect(), zone
+            assert_no_python_rdd(got)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_zone)
+
+
+def test_above_local_relation_threshold(spark):
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    old = spark.conf.get(key)
+    schema = T.StructType(
+        [T.StructField("id", T.LongType(), False), T.StructField("s", T.StringType(), True)]
+    )
+    columns = [list(range(2000)), [None if i % 7 == 0 else f"s{i}" for i in range(2000)]]
+    try:
+        spark.conf.set(key, "1")
+        df = local_dataframe(spark, columns, schema)
+        text = plan_and_lineage(df)
+        assert "LocalTableScan" not in text and "PythonRDD" not in text, text
+        assert df.collect() == spark.createDataFrame(list(zip(*columns)), schema).collect()
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_driver_built_frames_have_no_python_rdd(spark, monkeypatch):
+    g = TemporalGraph.create(spark)
+    a, b = g.add_vertex(), g.add_vertex()
+    a.set_property("name", "a")
+    g.add_edge(None, a, b, "knows").set_property("w", 0.5)
+    for df in (g.vertices_df(), g.edges_df(), g.tx_log_df(), g.vertices_df(snapshot=False)):
+        assert_no_python_rdd(df)
+
+    edges = spark.range(1, 30).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    monkeypatch.setattr(AN, "CC_DRIVER_EDGE_MAX", 1 << 18)
+    assert_no_python_rdd(AN.connected_components(edges))
+    assert_no_python_rdd(AN.connected_components_star(edges))
+    monkeypatch.setattr(AN, "BFS_DRIVER_EDGE_MAX", 1 << 21)
+    assert_no_python_rdd(
+        AN.closeness_centrality(edges, spark.range(1, 4), max_iters=3)
+    )
+
+    docs = spark.range(40).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.lit("the quick brown fox"), (F.col("id") % 5).cast("string"))
+        .alias("text"),
+    )
+    monkeypatch.setattr(dedup, "LSH_DRIVER_BAND_MAX", 1 << 21)
+    monkeypatch.setattr(dedup, "_LSH_DRIVER_GRAMS_MAX", 1 << 24)
+    both = dedup.minhash_lsh_dedup_reproducible(
+        docs, "doc_id", "text", n=2, num_hashes=8, bands=8, threshold=0.0
+    )
+    assert both.count() > 0
+    assert_no_python_rdd(both)
+    # driver candidate selection, distributed verify over shipped pairs
+    monkeypatch.setattr(dedup, "_LSH_DRIVER_GRAMS_MAX", 0)
+    shipped = dedup.minhash_lsh_dedup_reproducible(
+        docs, "doc_id", "text", n=2, num_hashes=8, bands=8, threshold=0.0
+    )
+    assert sorted(map(tuple, shipped.collect())) == sorted(map(tuple, both.collect()))
+    assert "PythonRDD" not in plan_and_lineage(shipped)
+
+
+def test_create_dataframe_only_in_helper():
+    """Only local_relation.py may call ``createDataFrame``: a python-list
+    local relation runs a Python worker on every action."""
+    root = os.path.dirname(fluxgraph_spark.__file__)
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                    and os.path.relpath(path, root) != "local_relation.py"
+                ):
+                    offenders.append(f"{os.path.relpath(path, root)}:{node.lineno}")
+    assert not offenders, offenders
