@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from . import model as M
 from .elements import BOTH, IN, OUT, FluxSparkEdge, FluxSparkVertex, TimeAwareElement
 from .store import LocalStore, RowVersion
+from .tx_index import TxTimeIndex
 
 Element = Union[FluxSparkVertex, FluxSparkEdge]
 
@@ -88,6 +89,7 @@ class TemporalGraph:
         self._transaction_time: Optional[datetime.datetime] = None
         self._indexed_keys: dict[str, set[str]] = {M.VERTEX_KIND: set(), M.EDGE_KIND: set()}
         self._tx_times: dict[int, datetime.datetime] = {}
+        self._tx_index = TxTimeIndex()
         self.features = dict(FEATURES)
         self.read_only = False
 
@@ -149,7 +151,13 @@ class TemporalGraph:
         )
         tx = self._store.new_tx(t)
         self._tx_times[tx] = t
+        self._tx_index.add(t, tx)
         return tx
+
+    def _reset_tx_times(self, tx_times: dict[int, datetime.datetime]) -> None:
+        """Adopt a whole tx id -> time map (rehydrate, difference graphs)."""
+        self._tx_times = tx_times
+        self._tx_index = TxTimeIndex((t, tx) for tx, t in tx_times.items())
 
     def _store_tx_time(self, tx: int) -> datetime.datetime:
         return self._tx_times[tx]
@@ -166,15 +174,11 @@ class TemporalGraph:
     # ------------------------------------------------------------------ #
 
     def resolve_checkpoint(self, t: datetime.datetime) -> int:
-        """max(tx_id) with tx_time <= t — an aggregate, not the reference's
-        all-transactions Java loop (FluxGraph.java:228-241).  Because
-        backdating can interleave tx_time out of order, this scans times,
-        never assumes sorted order."""
-        best = 0
-        for tx, tt in self._tx_times.items():
-            if tt <= t and tx > best:
-                best = tx
-        return best
+        """max(tx_id) with tx_time <= t, by bisect over the graph's
+        ``TxTimeIndex`` rather than the reference's all-transactions Java
+        loop (FluxGraph.java:228-241).  Backdated, out-of-order tx times
+        are indexed in time order, so no scan is needed."""
+        return self._tx_index.resolve(t)
 
     def set_checkpoint_time(self, t: Optional[datetime.datetime]) -> None:
         self._checkpoint_tx = None if t is None else self.resolve_checkpoint(t)
@@ -184,6 +188,7 @@ class TemporalGraph:
         ImmutableFluxGraph(uri, Date), ImmutableFluxGraph.java:41-44)."""
         g = TemporalGraph(self.spark, self._store)
         g._tx_times = self._tx_times
+        g._tx_index = self._tx_index
         g._checkpoint_tx = self.resolve_checkpoint(t)
         g.read_only = True
         return g
@@ -441,15 +446,18 @@ class TemporalGraph:
     # ------------------------------------------------------------------ #
 
     def vertices_df(self, snapshot: bool = True) -> DataFrame:
-        """Vertices as a DataFrame; ``snapshot=True`` applies the session
-        checkpoint (or 'current') filter, ``snapshot=False`` returns full
-        SCD2 history."""
-        df = self._store.to_dataframe(self.spark, M.VERTEX_KIND)
-        return self._apply_snapshot(df) if snapshot else df
+        """Vertices as a DataFrame; ``snapshot=True`` holds only the rows
+        visible at the session checkpoint (or current), ``snapshot=False``
+        the full SCD2 history.  Both carry the full-history schema."""
+        return self._store_df(M.VERTEX_KIND, snapshot)
 
     def edges_df(self, snapshot: bool = True) -> DataFrame:
-        df = self._store.to_dataframe(self.spark, M.EDGE_KIND)
-        return self._apply_snapshot(df) if snapshot else df
+        return self._store_df(M.EDGE_KIND, snapshot)
+
+    def _store_df(self, kind: str, snapshot: bool) -> DataFrame:
+        if snapshot:
+            return self._store.snapshot_dataframe(self.spark, kind, self._checkpoint_tx)
+        return self._store.to_dataframe(self.spark, kind)
 
     def tx_log_df(self) -> DataFrame:
         return self._store.tx_log_dataframe(self.spark)
@@ -464,11 +472,6 @@ class TemporalGraph:
         self.edges_df(snapshot).createOrReplaceTempView("edges")
         self.tx_log_df().createOrReplaceTempView("tx_log")
         return self.spark.sql(query)
-
-    def _apply_snapshot(self, df: DataFrame) -> DataFrame:
-        from .operators.temporal import snapshot as snap
-
-        return snap(df, self._checkpoint_tx)
 
     # ------------------------------------------------------------------ #
     # difference (P10, P11, S9)                                           #

@@ -97,7 +97,8 @@ def build_difference_graph(origin: "TemporalGraph", facts: Set[Fact]) -> "Tempor
     from ..store import LocalStore, RowVersion
 
     store = LocalStore()
-    tx = store.new_tx(datetime.datetime.now())
+    now = datetime.datetime.now()
+    tx = store.new_tx(now)
 
     vertex_ids = {f[0] for f in facts if _is_type_fact(f) and f[2] == TYPE_VERTEX}
     edge_ids = {f[0] for f in facts if _is_type_fact(f) and f[2] == TYPE_EDGE}
@@ -140,7 +141,7 @@ def build_difference_graph(origin: "TemporalGraph", facts: Set[Fact]) -> "Tempor
         )
 
     g = TemporalGraph(origin.spark, store)
-    g._tx_times = {tx: datetime.datetime.now()}
+    g._reset_tx_times({tx: now})
     g.read_only = True
     return g
 

@@ -40,7 +40,12 @@ def snapshot(df: DataFrame, tx: Optional[int]) -> DataFrame:
 def resolve_checkpoint(tx_log: DataFrame, t: datetime.datetime) -> int:
     """max(tx_id) with tx_time <= t — one aggregate instead of the
     reference's scan-all-transactions Java loop (FluxGraph.java:228-241).
-    Robust to backdated (out-of-order) tx_time by construction."""
+    Robust to backdated (out-of-order) tx_time by construction.
+
+    A Spark job per call: ``DataFrameGraph`` resolves from a driver-side
+    ``TxTimeIndex`` built once and calls this only for a tx_log with more
+    than ``parquet_io.TX_INDEX_MAX_TIMES`` distinct times; the mutable
+    ``TemporalGraph`` keeps its own index current as it allocates txs."""
     row = tx_log.where(F.col(M.TX_TIME) <= F.lit(t)).agg(
         F.max(M.TX_ID).alias("tx")
     ).first()

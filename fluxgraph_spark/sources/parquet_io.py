@@ -16,15 +16,22 @@ snapshots prune partitions.
 from __future__ import annotations
 
 import datetime
+import functools
 import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import model as M
 from ..graph import TemporalGraph
 from ..store import LocalStore, RowVersion
+from ..tx_index import TxTimeIndex
+
+# Distinct tx times a DataFrameGraph indexes on the driver.  A tx_log
+# with more resolves each checkpoint with one Spark aggregate instead.
+TX_INDEX_MAX_TIMES = 1 << 17
 
 
 def save_graph_parquet(graph: TemporalGraph, path: str) -> None:
@@ -95,11 +102,13 @@ def load_graph_parquet(
             store.retire_edge(store._rows(M.EDGE_KIND)[-1])
         max_id = max(max_id, d[M.ID])
         max_tx = max(max_tx, d[M.TX_FROM])
+    tx_times = {}
     for row in log:
         d = row.asDict()
         store.log_tx(d[M.TX_ID], d[M.TX_TIME], d[M.ELEMENT_ID], d[M.PREV_TX_ID], d[M.KIND])
-        g._tx_times[d[M.TX_ID]] = d[M.TX_TIME]
+        tx_times[d[M.TX_ID]] = d[M.TX_TIME]
         max_tx = max(max_tx, d[M.TX_ID])
+    g._reset_tx_times(tx_times)
     store._next_id = max_id + 1
     store._next_tx = max_tx + 1
     return g
@@ -110,6 +119,13 @@ class DataFrameGraph:
 
     Accepts plain (id/src/dst/label) tables — SCD2 columns are defaulted
     if absent — or full history tables written by save_graph_parquet.
+
+    Checkpoints resolve from a ``TxTimeIndex`` built once per graph, on
+    the first ``set_checkpoint_time``, from one bounded collect of the
+    tx_log's ``(tx_time, max tx_id)`` slice: the graph is a read-only
+    view over the DataFrames it was given, so the slice cannot change.
+    Past ``TX_INDEX_MAX_TIMES`` distinct times each call runs
+    ``operators.temporal.resolve_checkpoint`` instead.
     """
 
     def __init__(
@@ -140,9 +156,31 @@ class DataFrameGraph:
             return
         if self._tx_log is None:
             raise ValueError("as-of requires a tx_log DataFrame")
-        from ..operators.temporal import resolve_checkpoint
+        if self._tx_index is None:
+            from ..operators.temporal import resolve_checkpoint
 
-        self._checkpoint_tx = resolve_checkpoint(self._tx_log, t)
+            self._checkpoint_tx = resolve_checkpoint(self._tx_log, t)
+        else:
+            self._checkpoint_tx = self._tx_index.resolve(T.TimestampType().toInternal(t))
+
+    @functools.cached_property
+    def _tx_index(self) -> Optional[TxTimeIndex]:
+        """Epoch microseconds of each distinct tx time -> max tx id, or
+        None past ``TX_INDEX_MAX_TIMES`` times.  Keys are what Spark
+        compares in ``tx_time <= lit(t)``: the column cast to TIMESTAMP
+        (a TIMESTAMP_NTZ column is read in the session zone) against the
+        literal's instant, ``TimestampType.toInternal(t)``."""
+        micros = F.unix_micros(F.col(M.TX_TIME).cast("timestamp"))
+        rows = (
+            self._tx_log.where(micros.isNotNull() & F.col(M.TX_ID).isNotNull())
+            .groupBy(micros.alias("t"))
+            .agg(F.max(M.TX_ID).alias("tx"))
+            .limit(TX_INDEX_MAX_TIMES + 1)
+            .collect()
+        )
+        if len(rows) > TX_INDEX_MAX_TIMES:
+            return None
+        return TxTimeIndex((r["t"], r["tx"]) for r in rows)
 
     def vertices_df(self, snapshot: bool = True) -> DataFrame:
         from ..operators.temporal import snapshot as snap

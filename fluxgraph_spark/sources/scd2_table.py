@@ -123,32 +123,23 @@ class Scd2ParquetTable:
             return T.StructType.fromJson(m["schema"])
         return None
 
-    def _conform(self, df: DataFrame, m: Optional[dict]) -> DataFrame:
-        """Present ``df`` under the manifest-recorded TABLE schema.
+    def _read_paths(self, paths: list[str], m: Optional[dict]) -> DataFrame:
+        """Bucket dirs under the manifest-recorded TABLE schema.
 
         After ``evolve_schema=True`` only the ingest's AFFECTED buckets
-        carry the new column; a keyed/bucket-pruned read whose pruned
-        buckets were last written before the evolution would otherwise
-        return the stale schema (mergeSchema merges only the pruned
-        paths' footers), making ``read(keys=[k])``'s schema depend on
-        which bucket ``k`` hashes into.  Conforming adds typed NULLs for
-        recorded columns the pruned footers lack — NULL is exactly what
-        those rows' values are under additive evolution — and fixes the
-        column order.  Columns present in ``df`` but absent from the
-        record (legacy manifests written before schemas were recorded)
-        pass through at the end, never dropped."""
+        carry the new column; reading with the recorded schema gives a
+        keyed/bucket-pruned read over buckets last written before the
+        evolution the SAME schema as ``read()`` — typed NULLs for the
+        recorded columns the pruned footers lack (NULL is exactly what
+        those rows' values are under additive evolution), in the recorded
+        column order — with no footer-merge job.  Every column a file
+        carries is in the record (each publish widens it).  Legacy
+        manifests written before schemas were recorded merge the footers
+        instead."""
         schema = self._recorded_schema(m)
         if schema is None:
-            return df
-        have = set(df.columns)
-        cols = [
-            F.col(f.name) if f.name in have
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-        names = {f.name for f in schema.fields}
-        cols += [F.col(c) for c in df.columns if c not in names]
-        return df.select(*cols)
+            return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def _evolved_schema_json(self, m: Optional[dict], merged: DataFrame) -> dict:
         """The schema to record at this publish: previous record (seeded
@@ -245,24 +236,14 @@ class Scd2ParquetTable:
             if all_paths and buckets is not None:
                 # valid table, but no committed bucket holds these keys
                 # (or the bucket intersection is empty): empty result
-                # with the FULL table schema (footers merged across
-                # bucket generations — a single bucket written before a
-                # schema evolution would miss the new columns), zero
-                # row groups scanned
-                df = self._conform(
-                    self.spark.read.option("mergeSchema", "true")
-                    .parquet(*all_paths)
-                    .where(F.lit(False)),
-                    m,
-                )
+                # with the FULL table schema (over every committed
+                # bucket — a legacy manifest's single bucket written
+                # before a schema evolution would miss the new columns),
+                # zero row groups scanned
+                df = self._read_paths(all_paths, m).where(F.lit(False))
                 return df.where(self._key_filter(keys)) if keys is not None else df
             raise ValueError(f"no committed data at {self.path}")
-        # conform to the recorded table schema so a pruned read over
-        # buckets last written before a schema evolution presents the
-        # SAME schema as read() (typed NULLs for the evolved columns)
-        df = self._conform(
-            self.spark.read.option("mergeSchema", "true").parquet(*paths), m
-        )
+        df = self._read_paths(paths, m)
         if keys is not None:
             df = df.where(self._key_filter(keys))
         return df
@@ -296,11 +277,9 @@ class Scd2ParquetTable:
                 "bucket version(s) were vacuumed; disable vacuum to retain "
                 "time-travel history"
             )
-        # conform to the schema recorded AT that version (historical
-        # reads present what that commit's readers saw)
-        return self._conform(
-            self.spark.read.option("mergeSchema", "true").parquet(*paths), m
-        )
+        # the schema recorded AT that version (historical reads present
+        # what that commit's readers saw)
+        return self._read_paths(paths, m)
 
     def history(self) -> DataFrame:
         """Commit log: one row per publish (version, committed_at,

@@ -21,7 +21,10 @@ Time-travel reads are indexed, so they cost what the answer touches:
 DataFrames are Arrow local relations (``local_relation.local_dataframe``:
 a ``LocalTableScan``, no Python worker per action), rebuilt only when the
 store has mutated since the last build (generation counter), so repeated
-reads are free.
+reads are free.  A snapshot view ships only the rows visible at its
+checkpoint (``iter_visible``), under the full-history schema: property
+columns come from a per-kind registry filled as versions are appended,
+so a column that is all NULL at the snapshot stays.
 """
 
 from __future__ import annotations
@@ -65,9 +68,13 @@ class LocalStore:
         self._in_all: dict[int, list[int]] = {}
         self._next_id = 1
         self._next_tx = 1
+        # every property column each kind's versions have carried
+        self._prop_cols: dict[str, set[str]] = {M.VERTEX_KIND: set(), M.EDGE_KIND: set()}
         self.generation = 0
-        # dataframe caches keyed by generation
+        # full-history relations per kind: (generation, df)
         self._df_cache: dict[str, tuple[int, DataFrame]] = {}
+        # snapshot views per kind: (generation, tx, df)
+        self._view_cache: dict[str, tuple[int, Optional[int], DataFrame]] = {}
 
     # -- id / tx allocation -------------------------------------------------
 
@@ -143,6 +150,7 @@ class LocalStore:
         idxs.append(len(rows))
         self._tx_from(kind)[eid].append(row["tx_from"])
         rows.append(row)
+        self._prop_cols[kind].update(row["props"])
         if kind == M.EDGE_KIND:
             self._out.setdefault(row["src"], set()).add(eid)
             self._in.setdefault(row["dst"], set()).add(eid)
@@ -207,18 +215,31 @@ class LocalStore:
     # -- property columns ---------------------------------------------------
 
     def prop_columns(self, kind: str) -> list[str]:
-        cols: dict[str, None] = {}
-        for row in self._rows(kind):
-            for c in row["props"]:
-                cols[c] = None
-        return sorted(cols)
+        """Every property column any version of ``kind`` has carried."""
+        return sorted(self._prop_cols[kind])
 
     # -- DataFrame materialization ------------------------------------------
 
     def to_dataframe(self, spark: SparkSession, kind: str) -> DataFrame:
+        """Full SCD2 history of ``kind``."""
         cached = self._df_cache.get(kind)
         if cached is not None and cached[0] == self.generation:
             return cached[1]
+        df = self._rows_dataframe(spark, kind, self._rows(kind))
+        self._df_cache[kind] = (self.generation, df)
+        return df
+
+    def snapshot_dataframe(self, spark: SparkSession, kind: str, tx: Optional[int]) -> DataFrame:
+        """The versions of ``kind`` visible at snapshot ``tx`` (None =
+        current), under the full-history schema."""
+        cached = self._view_cache.get(kind)
+        if cached is not None and cached[:2] == (self.generation, tx):
+            return cached[2]
+        df = self._rows_dataframe(spark, kind, list(self.iter_visible(kind, tx)))
+        self._view_cache[kind] = (self.generation, tx, df)
+        return df
+
+    def _rows_dataframe(self, spark: SparkSession, kind: str, rows: list[RowVersion]) -> DataFrame:
         props = self.prop_columns(kind)
         if kind == M.VERTEX_KIND:
             schema = M.vertex_schema(props)
@@ -226,12 +247,9 @@ class LocalStore:
         else:
             schema = M.edge_schema(props)
             base = M.EDGE_BASE_COLS
-        rows = self._rows(kind)
         columns = [[row[b] for row in rows] for b in base]
         columns += [[row["props"].get(c) for row in rows] for c in props]
-        df = local_dataframe(spark, columns, schema)
-        self._df_cache[kind] = (self.generation, df)
-        return df
+        return local_dataframe(spark, columns, schema)
 
     def tx_log_dataframe(self, spark: SparkSession) -> DataFrame:
         cached = self._df_cache.get("tx_log")

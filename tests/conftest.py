@@ -1,6 +1,7 @@
 import datetime
 import os
 import sys
+import time
 
 import pytest
 
@@ -24,6 +25,18 @@ def spark():
     )
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
+
+
+@pytest.fixture
+def process_zone(monkeypatch):
+    """A process-local zone (New York) that differs from the session
+    zones the tests set (UTC, Kolkata): naive datetimes are read in the
+    process zone."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
 
 
 @pytest.fixture()

@@ -6,10 +6,8 @@ import ast
 import datetime
 import decimal
 import os
-import time
 import uuid
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -46,17 +44,6 @@ def plan_and_lineage(df):
 def assert_no_python_rdd(df):
     text = plan_and_lineage(df)
     assert "ExistingRDD" not in text and "PythonRDD" not in text, text
-
-
-@pytest.fixture
-def process_zone(monkeypatch):
-    """A process-local zone (New York) that differs from the session zone
-    (UTC, then Kolkata) — naive datetimes are read in the process zone."""
-    monkeypatch.setenv("TZ", "America/New_York")
-    time.tzset()
-    yield
-    monkeypatch.undo()
-    time.tzset()
 
 
 def test_every_property_type_round_trips_with_nulls(spark):

@@ -570,6 +570,7 @@ def test_keyed_read_on_stale_bucket_presents_evolved_schema(spark, tmp_path):
     assert [f.name for f in got.schema.fields] == [
         f.name for f in tbl.read().schema.fields
     ]
+    assert got.schema == tbl.read().schema
     assert got.collect()[0]["score"] is None
     # selects/unions of the evolved column work across bucket generations
     both = tbl.read(keys=[k_stale]).unionByName(tbl.read(keys=[k_evolve]))

@@ -1,20 +1,26 @@
 """Indexed driver-store reads vs the row scans they replaced.
 
 The store answers time-travel reads from per-element ``tx_from`` lists
-and all-time incidence lists.  The oracles below are the scan
+and all-time incidence lists, checkpoints from a ``TxTimeIndex``, and
+snapshot views from the visible rows alone.  The oracles below are the
 algorithms the engine used before (walk an element's full history, walk
-every edge row); on seeded random histories with backdated writes,
-self-loops and the zero-length vertex row ``remove_vertex`` writes, both
-must return the same rows, in the same order, at every tx."""
+every edge row, scan every tx time, filter the full-history relation
+with ``temporal.snapshot``); on seeded random histories with backdated
+writes, self-loops and the zero-length vertex row ``remove_vertex``
+writes, both must return the same rows, in the same order, at every tx."""
 
 import datetime
 import random
+from collections import Counter
 
 import pytest
 
 from fluxgraph_spark import model as M
 from fluxgraph_spark.elements import BOTH, IN, OUT, FluxSparkEdge, FluxSparkVertex
-from fluxgraph_spark.graph import TemporalGraph
+from fluxgraph_spark.graph import TemporalGraph, WorkingSet
+from fluxgraph_spark.operators.temporal import snapshot
+from fluxgraph_spark.sources.parquet_io import load_graph_parquet, save_graph_parquet
+from fluxgraph_spark.tx_index import TxTimeIndex
 
 T0 = datetime.datetime(2020, 1, 1)
 LABELS = ("a", "b", "c")
@@ -121,11 +127,18 @@ def scan_resolve_checkpoint(tx_times, t):
     return best
 
 
+def resolve_probes(tx_times):
+    """Every tx time, a second after each, and one before all."""
+    probes = sorted(set(tx_times.values()))
+    probes += [t + datetime.timedelta(seconds=1) for t in probes]
+    return probes + [T0 - datetime.timedelta(days=1)]
+
+
 # -- random histories --------------------------------------------------------
 
-def random_graph(seed, n_ops=120):
+def random_graph(seed, n_ops=120, spark=None):
     rng = random.Random(seed)
-    g = TemporalGraph(spark=None)
+    g = TemporalGraph(spark)
     clock = T0
     vertices, edges = [], []
     for _ in range(n_ops):
@@ -168,6 +181,9 @@ def test_indexed_store_matches_scans(seed):
     assert any(b < a for a, b in zip(times, times[1:])), "no backdated write"
     assert any(r["src"] == r["dst"] for r in store.edges), "no self-loop"
     assert any(r["tx_from"] == r["tx_to"] for r in store.vertices), "no zero-length row"
+    for kind in (M.VERTEX_KIND, M.EDGE_KIND):
+        walked = sorted({c for row in store._rows(kind) for c in row["props"]})
+        assert store.prop_columns(kind) == walked
 
     for tx in [None] + list(range(store.max_tx + 2)):
         for kind, ids in ((M.VERTEX_KIND, v_ids), (M.EDGE_KIND, e_ids)):
@@ -198,8 +214,82 @@ def test_indexed_store_matches_scans(seed):
                     store, kind, eid, tx
                 )
 
-    probes = sorted(set(g._tx_times.values()))
-    probes += [t + datetime.timedelta(seconds=1) for t in probes]
-    probes += [T0 - datetime.timedelta(days=1)]
-    for t in probes:
+    for t in resolve_probes(g._tx_times):
         assert g.resolve_checkpoint(t) == scan_resolve_checkpoint(g._tx_times, t)
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_snapshot_views_match_filtered_history(spark, seed):
+    """Snapshot views hold the visible rows only, under the full-history
+    schema: the same rows and schema as the full-history relation
+    filtered by ``temporal.snapshot``."""
+    g = random_graph(seed, spark=spark)
+    views = {M.VERTEX_KIND: g.vertices_df, M.EDGE_KIND: g.edges_df}
+    for tx in [None] + list(range(g._store.max_tx + 2)):
+        g._checkpoint_tx = tx
+        for kind, view in views.items():
+            got, want = view(), snapshot(view(snapshot=False), tx)
+            assert got.schema == want.schema, (kind, tx)
+            assert Counter(got.collect()) == Counter(want.collect()), (kind, tx)
+    # a snapshot that predates a property column still carries it
+    g._checkpoint_tx = 1
+    assert g.vertices_df().columns == g.vertices_df(snapshot=False).columns
+    assert set(g.vertices_df(snapshot=False).columns) > set(M.VERTEX_BASE_COLS)
+
+
+def random_tx_times(rng, order, n=200):
+    """tx id -> time, ids allocated in order, times per ``order``."""
+    times, clock = {}, T0
+    for tx in range(1, n + 1):
+        clock += datetime.timedelta(minutes=rng.randint(0, 3))
+        if order == "backdated" and rng.random() < 0.3:
+            times[tx] = T0 + (clock - T0) * rng.random()
+        elif order == "equal":
+            times[tx] = T0 + datetime.timedelta(hours=rng.randint(0, 5))
+        else:
+            times[tx] = clock
+    return times
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+@pytest.mark.parametrize("order", ["in_order", "backdated", "equal"])
+def test_tx_time_index_matches_scan(seed, order):
+    rng = random.Random(seed)
+    tx_times = random_tx_times(rng, order)
+    incremental = TxTimeIndex()
+    for tx, t in tx_times.items():
+        incremental.add(t, tx)
+    # rehydrate order: the log's rows in any order, indexed at once
+    pairs = [(t, tx) for tx, t in tx_times.items()]
+    rng.shuffle(pairs)
+    bulk = TxTimeIndex(pairs)
+    for t in resolve_probes(tx_times):
+        want = scan_resolve_checkpoint(tx_times, t)
+        assert incremental.resolve(t) == want == bulk.resolve(t), t
+    assert TxTimeIndex().resolve(T0) == 0
+    with pytest.raises(ValueError, match="not newer"):
+        incremental.add(T0, len(tx_times))
+
+
+def test_rehydrated_and_difference_graphs_resolve_like_their_tx_times(spark, tmp_path):
+    g = random_graph(1, spark=spark)
+    save_graph_parquet(g, str(tmp_path))
+    loaded = load_graph_parquet(spark, str(tmp_path))
+    assert loaded._tx_times == g._tx_times
+    for t in resolve_probes(g._tx_times):
+        assert loaded.resolve_checkpoint(t) == g.resolve_checkpoint(t), t
+        assert loaded.resolve_checkpoint(t) == scan_resolve_checkpoint(loaded._tx_times, t)
+
+    vids = list(g._store._v_index)
+    times = sorted(g._tx_times.values())
+    d = g.difference(WorkingSet(vids), times[-1], times[len(times) // 2])
+    assert len(d._tx_times) == 1
+    for t in resolve_probes(d._tx_times):
+        assert d.resolve_checkpoint(t) == scan_resolve_checkpoint(d._tx_times, t), t
+    # an as-of view shares its source's index, writes after it included
+    view = g.as_of(times[-1])
+    g.set_transaction_time(T0 - datetime.timedelta(days=2))
+    g.add_vertex()
+    probe = T0 - datetime.timedelta(days=1)
+    assert view.resolve_checkpoint(probe) == g._store.max_tx
+    assert view.resolve_checkpoint(probe) == scan_resolve_checkpoint(g._tx_times, probe)
