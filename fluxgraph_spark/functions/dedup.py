@@ -16,12 +16,10 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..local_relation import local_dataframe
+from ..local_relation import bounded_arrow, integral, local_dataframe
 from .text import TOKEN_RE, let_, stable_hash64
 
 
@@ -1437,21 +1435,17 @@ def minhash_lsh_dedup_reproducible(
 # When the banded fingerprint table fits one bounded driver collect,
 # the whole selection replays in numpy instead of a self-join + an
 # exchange + two window sorts (each a full stage at cluster latency).
-LSH_DRIVER_BAND_MAX = int(os.environ.get("FLUX_LSH_DRIVER_MAX", str(1 << 21)))
+LSH_DRIVER_BAND_MAX = 1 << 21
 # the in-replay pair budget: hot buckets pair quadratically; past this
 # the distributed form (with its skew machinery) runs instead
-_LSH_DRIVER_PAIRS_MAX = int(
-    os.environ.get("FLUX_LSH_DRIVER_PAIRS_MAX", str(1 << 23))
-)
+_LSH_DRIVER_PAIRS_MAX = 1 << 23
 # total corpus grams under which the Jaccard verify also runs on the
 # driver.  The binding cost is single-threaded python (arrow->pylist +
 # set building ~1.4 s/M grams measured), NOT memory: at 2.6M grams
 # (sf1.0) the driver verify measured 6.1 s vs 3.7 s distributed, at
 # 0.26M (sf0.1) it wins — the default sits between the two with 2x
 # headroom over the win case.
-_LSH_DRIVER_GRAMS_MAX = int(
-    os.environ.get("FLUX_LSH_DRIVER_GRAMS_MAX", str(1 << 19))
-)
+_LSH_DRIVER_GRAMS_MAX = 1 << 19
 
 
 def _round6_half_up(x: float) -> float:
@@ -1514,29 +1508,20 @@ def _banded_pairs_driver(
     caps, or id types the replay does not model).  Decision-identical
     by construction: every step is integer arithmetic over the same
     collected rows the joins would shuffle."""
-    import pyspark.sql.types as T
-
-    cap = LSH_DRIVER_BAND_MAX
-    if cap <= 0:
-        return None
-    if not isinstance(
-        banded.schema["id"].dataType,
-        (T.LongType, T.IntegerType, T.ShortType, T.ByteType),
-    ):
+    if not integral(banded, "id"):
         return None
     # banded is checkpointed by the caller: the count reads block
     # metadata, the collect scans the blocks once
-    if (banded.count() if n_band is None else n_band) > cap:
+    tbl = bounded_arrow(
+        banded,
+        LSH_DRIVER_BAND_MAX,
+        not_null=("id", "band", "bucket"),
+        rows=banded.count if n_band is None else n_band,
+    )
+    if tbl is None:
         return None
     import numpy as np
 
-    tbl = banded.toArrow()
-    if (
-        tbl.column("id").null_count
-        or tbl.column("band").null_count
-        or tbl.column("bucket").null_count
-    ):
-        return None
     ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
     band = tbl.column("band").to_numpy(zero_copy_only=False).astype(np.int64)
     bucket = tbl.column("bucket").to_numpy(zero_copy_only=False)

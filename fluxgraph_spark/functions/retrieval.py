@@ -45,7 +45,6 @@ Scale shape (the 100 TB story):
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
@@ -60,7 +59,7 @@ MICRO = 1_000_000.0
 # term set as a literal array (O(|terms|) per token + a literal tree
 # that bloats planning) and joins the exploded tokens against the
 # broadcast term table instead.
-BM25_LITERAL_TERMS_MAX = int(os.environ.get("FLUX_BM25_LITERAL_TERMS_MAX", "256"))
+BM25_LITERAL_TERMS_MAX = 256
 
 
 def tokens(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -12,14 +12,13 @@ not ``rand()`` — resumable runs and cross-engine tests depend on it.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..local_relation import local_dataframe
+from ..local_relation import bounded_arrow, local_dataframe
 
 
 def _as_double_vec(col: Column) -> Column:
@@ -335,9 +334,8 @@ def cosine_topk_lsh(
 # with the scan tier), so the k=16/23 gate layouts now ride the same
 # path that wins at every measured scale.  k ≤ 8 stays unrolled: tiny
 # unit fixtures remain Python-worker-free and their literal trees are
-# too small to matter.  Env override FLUX_IVF_UNROLL_MAX lets
-# out-of-process gates (scripts/check_oracle.py) force either path.
-IVF_ASSIGN_UNROLL_MAX = int(os.environ.get("FLUX_IVF_UNROLL_MAX", "8"))
+# too small to matter.
+IVF_ASSIGN_UNROLL_MAX = 8
 
 # Past this centroid count the centroid matrix stops fitting one
 # driver collect / executor broadcast (k·dim·8 bytes: 2^18 centroids at
@@ -345,8 +343,8 @@ IVF_ASSIGN_UNROLL_MAX = int(os.environ.get("FLUX_IVF_UNROLL_MAX", "8"))
 # ceiling) and ivf_assign switches to the SHARDED scan: per-shard
 # Arrow top-n_probe carrying the exact sort key, merged by one global
 # per-id window — decision-identical, at the price of one corpus scan
-# per shard.  Env override FLUX_IVF_BROADCAST_MAX for tests/gates.
-IVF_ASSIGN_BROADCAST_MAX = int(os.environ.get("FLUX_IVF_BROADCAST_MAX", str(1 << 18)))
+# per shard.
+IVF_ASSIGN_BROADCAST_MAX = 1 << 18
 
 # Safety slack on the coarse pruning bound (see _ivf_assign_arrow): the
 # bound math runs through BLAS matmul + arccos/cos, whose rounding near
@@ -374,7 +372,7 @@ def ivf_assign(
 
     Two decision-identical physical strategies, auto-selected on the
     centroid count k (``max_unrolled_centroids``, default
-    :data:`IVF_ASSIGN_UNROLL_MAX` = 32 — the measured
+    :data:`IVF_ASSIGN_UNROLL_MAX` = 8 — the measured
     crossover note there):
 
     * **k ≤ cap — unrolled literal map**: centroids unroll into one
@@ -424,13 +422,15 @@ def ivf_assign(
     # on every call, including per Lloyd iteration).  Past the ceiling
     # the rows are discarded and the sharded tier re-reads per shard —
     # the rare tier pays, not the common path.
-    rows = centroids.select("centroid_id", "cvec").limit(bcap + 1).collect()
-    if len(rows) > bcap:
-        del rows
+    tbl = bounded_arrow(centroids.select("centroid_id", "cvec"), bcap)
+    if tbl is None:
         return _ivf_assign_sharded(
             vectors, centroids, n_probe, id_col, vec_col, max(1, bcap)
         )
-    cents = [(r["centroid_id"], [float(x) for x in r["cvec"]]) for r in rows]
+    cents = [
+        (cid, [float(x) for x in cvec])
+        for cid, cvec in zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist())
+    ]
     if len(cents) > cap:
         return _ivf_assign_arrow(vectors, centroids, cents, n_probe, id_col, vec_col)
     import math
@@ -1074,9 +1074,8 @@ def pq_codebooks(
 # dsub) — at the FAISS-convention derived geometry (m=dim/4, ksub=256:
 # 4096 entries at dim 64) the literal plan is both slow to build and
 # past any sane plan-size budget, while 64-entry pinned layouts stay
-# on the long-verified JVM-only path.  Env override FLUX_PQ_UNROLL_MAX
-# lets out-of-process gates force either path.
-PQ_ENCODE_UNROLL_MAX = int(os.environ.get("FLUX_PQ_UNROLL_MAX", "512"))
+# on the long-verified JVM-only path.
+PQ_ENCODE_UNROLL_MAX = 512
 
 
 def pq_encode(

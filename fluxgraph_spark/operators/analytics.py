@@ -17,7 +17,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -25,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import model as M
-from ..local_relation import local_dataframe
+from ..local_relation import bounded_arrow, files_prove_over, integral, local_dataframe
 
 
 def _finish(df: DataFrame, handles, checkpointed: bool = False) -> DataFrame:
@@ -67,73 +66,31 @@ def _vertices_of(edges: DataFrame) -> DataFrame:
 # upstream execution the driver tier ever makes (the distributed star
 # path executes the upstream pair lineage twice: once for the edge
 # checkpoint, once for the vertex-universe persist).
-CC_DRIVER_EDGE_MAX = int(os.environ.get("FLUX_CC_DRIVER_MAX", str(1 << 18)))
-
-_CC_INTEGRAL = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-
-# Stats short-circuit for every driver-tier probe (VERDICT r12 item 7):
-# the ``limit(cap+1)`` probe executes the upstream lineage even when the
-# input is far over the cap and the rows are discarded.  When the plan
-# bottoms out in local files whose TOTAL BYTES already exceed
-# cap x (a generous per-row byte bound), the probe cannot possibly come
-# back under the cap — skip it and go straight to the distributed path.
-# Heuristic in the safe direction only: a wrong "over" merely skips the
-# acceleration; it can never pick the wrong result.
-_PROBE_ROW_BYTES = int(os.environ.get("FLUX_DRIVER_PROBE_ROW_BYTES", "512"))
+CC_DRIVER_EDGE_MAX = 1 << 18
 
 
-def probe_definitely_over(df: DataFrame, cap_rows: int) -> bool:
-    """True when ``df``'s input files alone prove (at ~512 B/row, far
-    above any real compressed row of these narrow tables) that the row
-    count exceeds ``cap_rows`` — callers skip the bounded collect probe
-    entirely.  Non-file plans return False (probe as before)."""
-    import os as _os
-    from urllib.parse import urlparse
-
-    if _PROBE_ROW_BYTES <= 0:
-        return False
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 — non-file plans
-        return False
-    budget = cap_rows * _PROBE_ROW_BYTES
-    total = 0
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return False
-        try:
-            total += _os.path.getsize(u.path)
-        except OSError:
-            return False
-        if total > budget:
-            return True
-    return False
+def _cc_ids(edges: DataFrame) -> bool:
+    """The id-type gate of the components and walk tiers: integral
+    endpoints of one type."""
+    return (
+        integral(edges, M.SRC)
+        and edges.schema[M.DST].dataType == edges.schema[M.SRC].dataType
+    )
 
 
 def _cc_collect_bounded(edges: DataFrame, cap: int):
-    """One bounded action deciding the components tier: the first
-    ``cap + 1`` (src, dst) rows — None means "use the distributed
-    path" (over the cap, or non-integral id types the driver replay
-    does not model)."""
-    if cap <= 0:
+    """The (src, dst) pairs when the edge list fits ``cap`` rows, else
+    None: use the distributed path (over the cap, NULL endpoints, or id
+    types the driver replay does not model)."""
+    if not _cc_ids(edges):
         return None
-    src_t = edges.schema[M.SRC].dataType
-    dst_t = edges.schema[M.DST].dataType
-    if not isinstance(src_t, _CC_INTEGRAL) or dst_t != src_t:
+    # NULL endpoints: keep the distributed path's join semantics
+    tbl = bounded_arrow(
+        edges.select(M.SRC, M.DST), cap, not_null=(M.SRC, M.DST), file_rows=True
+    )
+    if tbl is None:
         return None
-    if probe_definitely_over(edges, cap):
-        return None
-    tbl = edges.select(M.SRC, M.DST).limit(cap + 1).toArrow()
-    if tbl.num_rows > cap:
-        return None
-    if tbl.column(0).null_count or tbl.column(1).null_count:
-        # null endpoints: keep the distributed path's join/do-not-model
-        # semantics rather than guessing them here
-        return None
-    us = tbl.column(0).to_pylist()
-    vs = tbl.column(1).to_pylist()
-    return list(zip(us, vs))
+    return list(zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()))
 
 
 def _cc_label_driver(pairs, max_iters, early_stop, assert_converged):
@@ -571,55 +528,41 @@ def sssp(
 # same (count, level-sum) tail-stat assert, the same integer-micro
 # closeness arithmetic) runs on numpy arrays; past it the distributed
 # path is untouched.
-BFS_DRIVER_EDGE_MAX = int(os.environ.get("FLUX_BFS_DRIVER_MAX", str(1 << 21)))
+BFS_DRIVER_EDGE_MAX = 1 << 21
 _BFS_DRIVER_SOURCE_MAX = 4096
 # The tier holds one dense int64 level array PER SOURCE, so its real
 # memory is len(sources) x n_vertices cells — the edge and source caps
 # alone admit ~4.2M vertices x 4096 sources ≈ 137 GB.  Gate on the
 # product: 2^26 cells x 8 B = 512 MB worst case, comfortably driver-
 # sized, and anything larger falls back to the distributed supersteps.
-_BFS_DRIVER_CELLS_MAX = int(
-    os.environ.get("FLUX_BFS_DRIVER_CELLS_MAX", str(1 << 26))
-)
+_BFS_DRIVER_CELLS_MAX = 1 << 26
 
 
 def _closeness_driver_tier(
     edges: DataFrame, sources: DataFrame, max_iters: int, assert_converged: bool
 ):
     cap = BFS_DRIVER_EDGE_MAX
-    if cap <= 0:
-        return None
-    src_t = edges.schema[M.SRC].dataType
-    dst_t = edges.schema[M.DST].dataType
     s_field = sources.schema[sources.columns[0]]
-    if not (
-        isinstance(src_t, _CC_INTEGRAL)
-        and isinstance(dst_t, _CC_INTEGRAL)
-        and isinstance(s_field.dataType, _CC_INTEGRAL)
-    ):
-        return None
-    if probe_definitely_over(edges, cap):
-        return None
-    src_rows = (
-        sources.select(F.col(sources.columns[0]).alias("source"))
-        .distinct()
-        .limit(_BFS_DRIVER_SOURCE_MAX + 1)
-        .collect()
-    )
-    if len(src_rows) > _BFS_DRIVER_SOURCE_MAX or any(
-        r[0] is None for r in src_rows
-    ):
-        return None
-    tbl = edges.select(M.SRC, M.DST).limit(cap + 1).toArrow()
+    # every job-free gate before the source sample's job
     if (
-        tbl.num_rows > cap
-        or tbl.column(0).null_count
-        or tbl.column(1).null_count
+        not (integral(edges, M.SRC, M.DST) and integral(sources, s_field.name))
+        or cap <= 0
+        or files_prove_over(edges, cap)
     ):
+        return None
+    src_tbl = bounded_arrow(
+        sources.select(F.col(s_field.name).alias("source")).distinct(),
+        _BFS_DRIVER_SOURCE_MAX,
+        not_null=("source",),
+    )
+    if src_tbl is None:
+        return None
+    tbl = bounded_arrow(edges.select(M.SRC, M.DST), cap, not_null=(M.SRC, M.DST))
+    if tbl is None:
         return None
     import numpy as np
 
-    srcs = sorted({r[0] for r in src_rows})
+    srcs = sorted(src_tbl.column(0).to_pylist())
     eu = tbl.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
     ev = tbl.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
     ids = np.unique(
@@ -1441,7 +1384,7 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
 # path is untouched.  stable_hash64 is replayed exactly:
 # int(md5(s)[:15 hex], 16) — the same 60-bit value Spark's
 # conv(substring(md5(x),1,15),16,10) produces.
-WALK_DRIVER_EDGE_MAX = int(os.environ.get("FLUX_WALK_DRIVER_MAX", str(1 << 18)))
+WALK_DRIVER_EDGE_MAX = 1 << 18
 _WALK_DRIVER_SOURCE_MAX = 1 << 16
 
 
@@ -1452,51 +1395,37 @@ def _stable_hash64_py(s: str) -> int:
 
 
 def _walk_driver_collect(edges: DataFrame, sources: DataFrame):
-    """One bounded action per side deciding the walk tier: the first
-    cap+1 (src, dst) rows and the distinct seed ids.  None means "use
-    the distributed path" (over a cap, nulls, or non-integral id types
-    whose ``cast("string")`` the replay does not model)."""
+    """The distinct seed ids, then the (src, dst) pairs, each in one
+    bounded collect.  None means "use the distributed path" (over a
+    cap, nulls, or non-integral id types whose ``cast("string")`` the
+    replay does not model)."""
     cap = WALK_DRIVER_EDGE_MAX
-    if cap <= 0:
-        return None
-    src_t = edges.schema[M.SRC].dataType
-    dst_t = edges.schema[M.DST].dataType
     s_field = sources.schema[sources.columns[0]]
-    if not (
-        isinstance(src_t, _CC_INTEGRAL)
-        and dst_t == src_t
-        and isinstance(s_field.dataType, _CC_INTEGRAL)
-    ):
-        return None
-    if probe_definitely_over(edges, cap):
-        return None
-    tbl = edges.select(M.SRC, M.DST).limit(cap + 1).toArrow()
+    # every job-free gate before the seed sample's job
     if (
-        tbl.num_rows > cap
-        or tbl.column(0).null_count
-        or tbl.column(1).null_count
+        not (_cc_ids(edges) and integral(sources, s_field.name))
+        or cap <= 0
+        or files_prove_over(edges, cap)
     ):
         return None
-    seed_rows = (
-        sources.select(F.col(sources.columns[0]).alias("walk_id"))
-        .distinct()
-        .limit(_WALK_DRIVER_SOURCE_MAX + 1)
-        .collect()
+    seeds = bounded_arrow(
+        sources.select(F.col(s_field.name).alias("walk_id")).distinct(),
+        _WALK_DRIVER_SOURCE_MAX,
+        not_null=("walk_id",),
     )
-    if len(seed_rows) > _WALK_DRIVER_SOURCE_MAX or any(
-        r[0] is None for r in seed_rows
-    ):
+    if seeds is None:
         return None
-    pairs = set(zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()))
-    seeds = sorted({r[0] for r in seed_rows})
+    pairs = _cc_collect_bounded(edges, cap)  # repeats the edge gates, no job
+    if pairs is None:
+        return None
     schema = T.StructType(
         [
             T.StructField("walk_id", s_field.dataType, True),
             T.StructField("path", T.StringType(), True),
-            T.StructField("final_v", dst_t, True),
+            T.StructField("final_v", edges.schema[M.DST].dataType, True),
         ]
     )
-    return pairs, seeds, schema
+    return set(pairs), sorted(seeds.column(0).to_pylist()), schema
 
 
 def _walk_adjacency(pairs, max_degree=None):

@@ -71,7 +71,6 @@ bag semantics (duplicate paths preserved) match, `dedup` set-ifies.
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass
 from typing import Any, Sequence
@@ -81,7 +80,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import model as M
-from ..local_relation import local_dataframe
+from ..local_relation import bounded_arrow, files_prove_over, integral, local_dataframe
 from .fluent import Traversal
 
 
@@ -534,18 +533,12 @@ def _closure_col(columns: Sequence[str], conds, loops: int):
 # type, or closure shape the replay does not model byte-for-byte falls
 # back to the distributed path (which also serves past the caps, where
 # the stats short-circuit skips even the bounded probes).
-GREMLIN_DRIVER_EDGE_MAX = int(
-    os.environ.get("FLUX_GREMLIN_DRIVER_MAX", str(1 << 21))
-)
-GREMLIN_DRIVER_VERTEX_MAX = int(
-    os.environ.get("FLUX_GREMLIN_DRIVER_VMAX", str(1 << 20))
-)
+GREMLIN_DRIVER_EDGE_MAX = 1 << 21
+GREMLIN_DRIVER_VERTEX_MAX = 1 << 20
 # in-replay budget: bag semantics can multiply the frontier per round
 # (hub fan-out); past this many frontier/emitted rows the replay abandons
 # and the distributed path runs instead (correct either way)
-_GREMLIN_DRIVER_ROWS_MAX = int(
-    os.environ.get("FLUX_GREMLIN_DRIVER_ROWS_MAX", str(1 << 24))
-)
+_GREMLIN_DRIVER_ROWS_MAX = 1 << 24
 
 _TIER_SECTION_OK = {"out", "in", "both", "has", "hasNot", "interval", "dedup"}
 
@@ -766,39 +759,29 @@ def _tier_collect_graph(vertices: DataFrame, edges: DataFrame):
     or non-integral id types)."""
     import numpy as np
 
-    from .analytics import probe_definitely_over
-
     vcap, ecap = GREMLIN_DRIVER_VERTEX_MAX, GREMLIN_DRIVER_EDGE_MAX
-    if vcap <= 0 or ecap <= 0:
-        return None
     v, e = vertices, edges
     if M.ID not in v.columns or not {M.SRC, M.DST, M.LABEL} <= set(e.columns):
         return None
-    integral = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-    if not isinstance(v.schema[M.ID].dataType, integral):
-        return None
-    if not (
-        isinstance(e.schema[M.SRC].dataType, integral)
-        and isinstance(e.schema[M.DST].dataType, integral)
+    # every job-free gate before the vertex collect's jobs
+    if (
+        not (integral(v, M.ID) and integral(e, M.SRC, M.DST))
+        or ecap <= 0
+        or files_prove_over(e, ecap)
     ):
         return None
-    if probe_definitely_over(v, vcap) or probe_definitely_over(e, ecap):
-        return None
-    # count first (a zero-column scan — parquet row groups, no data),
-    # then a PARALLEL toArrow: limit(cap+1).toArrow() would funnel the
-    # whole table through a single-partition global-limit exchange
-    if v.count() > vcap:
-        return None
-    vtbl = v.toArrow()
-    if vtbl.column(M.ID).null_count:
+    # counted (a zero-column scan — parquet row groups, no data), so the
+    # collect runs in parallel rather than through a global limit
+    vtbl = bounded_arrow(v, vcap, not_null=(M.ID,), rows=v.count, file_rows=True)
+    if vtbl is None:
         return None
     vids = vtbl.column(M.ID).to_numpy(zero_copy_only=False).astype(np.int64)
     if np.unique(vids).size != vids.size:
         return None  # duplicate vertex ids: join multiplicity not modeled
     e3 = e.select(M.SRC, M.DST, M.LABEL)
-    if e3.count() > ecap:
+    etbl = bounded_arrow(e3, ecap, rows=e3.count)
+    if etbl is None:
         return None
-    etbl = e3.toArrow()
     src = etbl.column(0)
     dst = etbl.column(1)
     # null endpoints never match any hop join — drop them up front
@@ -1035,8 +1018,8 @@ def _fixpoint_driver_tier(cur, section, while_conds, emit_conds, st: "_EvalState
     lf = _tier_collect_graph(cur._vertices, cur._edges)
     if lf is None:
         return None
-    ftbl = cur.df().select(M.ID).limit(_GREMLIN_DRIVER_ROWS_MAX + 1).toArrow()
-    if ftbl.num_rows > _GREMLIN_DRIVER_ROWS_MAX or ftbl.column(0).null_count:
+    ftbl = bounded_arrow(cur.df().select(M.ID), _GREMLIN_DRIVER_ROWS_MAX, not_null=(M.ID,))
+    if ftbl is None:
         return None
     import numpy as np
 

@@ -80,7 +80,7 @@ def auto_n_centroids(n_rows: int) -> int:
     10^9 → 31,623 (~31k each), 10^12 → 65,536 (cap; ~15M per list —
     at that scale raise the cap and shard the centroid table, or add a
     coarse second level).  Floor 16 keeps toy corpora from degenerating
-    to a handful of lists.  Past IVF_ASSIGN_UNROLL_MAX (32) lists,
+    to a handful of lists.  Past IVF_ASSIGN_UNROLL_MAX (8) lists,
     ``ivf_assign`` automatically switches to its Arrow-batched pruned
     scan, so the derived count never feeds an unrolled-literal plan
     that grows with the data.  Pass ``n_centroids`` explicitly to pin

@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from .. import model as M
 from ..graph import TemporalGraph
+from ..local_relation import bounded_arrow
 from ..store import LocalStore, RowVersion
 from ..tx_index import TxTimeIndex
 
@@ -171,16 +172,15 @@ class DataFrameGraph:
         (a TIMESTAMP_NTZ column is read in the session zone) against the
         literal's instant, ``TimestampType.toInternal(t)``."""
         micros = F.unix_micros(F.col(M.TX_TIME).cast("timestamp"))
-        rows = (
+        tbl = bounded_arrow(
             self._tx_log.where(micros.isNotNull() & F.col(M.TX_ID).isNotNull())
             .groupBy(micros.alias("t"))
-            .agg(F.max(M.TX_ID).alias("tx"))
-            .limit(TX_INDEX_MAX_TIMES + 1)
-            .collect()
+            .agg(F.max(M.TX_ID).alias("tx")),
+            TX_INDEX_MAX_TIMES,
         )
-        if len(rows) > TX_INDEX_MAX_TIMES:
+        if tbl is None:
             return None
-        return TxTimeIndex((r["t"], r["tx"]) for r in rows)
+        return TxTimeIndex(zip(tbl.column("t").to_pylist(), tbl.column("tx").to_pylist()))
 
     def vertices_df(self, snapshot: bool = True) -> DataFrame:
         from ..operators.temporal import snapshot as snap

@@ -996,6 +996,7 @@ def test_probe_short_circuit_skips_large_file_inputs(spark, monkeypatch, tmp_pat
     """VERDICT r12 item 7: when the input's file bytes alone prove the
     row count exceeds the driver-tier cap, the limit(cap+1) probe job
     must never execute — the tier declines on metadata only."""
+    from fluxgraph_spark import local_relation as LR
     from fluxgraph_spark.operators import analytics as AN
 
     p = str(tmp_path / "edges.parquet")
@@ -1005,8 +1006,8 @@ def test_probe_short_circuit_skips_large_file_inputs(spark, monkeypatch, tmp_pat
     edges = spark.read.parquet(p)
 
     # tiny per-row budget: any real file is "definitely over" a 1-row cap
-    monkeypatch.setattr(AN, "_PROBE_ROW_BYTES", 1)
-    assert AN.probe_definitely_over(edges, 1)
+    monkeypatch.setattr(LR, "_PROBE_ROW_BYTES", 1)
+    assert LR.files_prove_over(edges, 1)
     # the tier declines WITHOUT running a job
     sc = spark.sparkContext
     sc.setJobGroup("probe-sc-test", "probe short circuit")
@@ -1018,9 +1019,9 @@ def test_probe_short_circuit_skips_large_file_inputs(spark, monkeypatch, tmp_pat
         sc.setJobGroup(None, None)
 
     # with the real budget the small file is NOT "over", probe proceeds
-    monkeypatch.setattr(AN, "_PROBE_ROW_BYTES", 512)
-    assert not AN.probe_definitely_over(edges, 1 << 18)
+    monkeypatch.setattr(LR, "_PROBE_ROW_BYTES", 512)
+    assert not LR.files_prove_over(edges, 1 << 18)
     assert AN._cc_collect_bounded(edges, 1 << 18) is not None
     # in-memory frames (no files) never short-circuit
     mem = spark.createDataFrame([(1, 2)], ["src", "dst"])
-    assert not AN.probe_definitely_over(mem, 1)
+    assert not LR.files_prove_over(mem, 1)

@@ -1167,10 +1167,9 @@ def test_registry_semantic_ivf_dedupe_gate_data_through_arrow_path(
     """The driver-gated query itself (q_d_semantic_ivf_dedupe) at the
     sf0.001 gate data, forced through the Arrow assignment path, equals
     the default unrolled run — so the oracle that hash-gates the
-    unrolled path gates the scan path transitively.  (check_oracle with
-    FLUX_IVF_UNROLL_MAX=1 pins the same thing against DuckDB directly
-    at both gate SFs — this pytest keeps the equality from regressing
-    between rounds.)"""
+    unrolled path gates the scan path transitively.  No oracle run
+    forces the scan path, so this pytest is what keeps the equality
+    from regressing."""
     import __spark_entry__ as em
 
     flat = _rows(em.queries()["d_semantic_ivf_dedupe"](spark, SF_DIR))

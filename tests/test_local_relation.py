@@ -1,6 +1,8 @@
-"""The Arrow local-relation helper (local_relation.local_dataframe):
-values identical to what a python-list ``createDataFrame`` made of the
-same data, plans without a Python RDD, and no way around it."""
+"""The Arrow local-relation helpers.  ``local_dataframe``: values
+identical to what a python-list ``createDataFrame`` made of the same
+data, plans without a Python RDD, and no way around it.
+``bounded_arrow``/``integral``: the driver tiers' collect gates, and no
+hand-rolled collect or environment knob beside them."""
 
 import ast
 import datetime
@@ -13,9 +15,10 @@ from pyspark.sql import types as T
 
 import fluxgraph_spark
 from fluxgraph_spark import TemporalGraph
+from fluxgraph_spark import local_relation as LR
 from fluxgraph_spark import model as M
 from fluxgraph_spark.functions import dedup
-from fluxgraph_spark.local_relation import local_dataframe
+from fluxgraph_spark.local_relation import bounded_arrow, integral, local_dataframe
 from fluxgraph_spark.operators import analytics as AN
 
 SAMPLES = {
@@ -156,24 +159,139 @@ def test_driver_built_frames_have_no_python_rdd(spark, monkeypatch):
     assert "PythonRDD" not in plan_and_lineage(shipped)
 
 
+def package_trees():
+    """(path relative to the package, parsed module) for every module of
+    fluxgraph_spark."""
+    root = os.path.dirname(fluxgraph_spark.__file__)
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path, encoding="utf-8") as fh:
+                    yield os.path.relpath(path, root), ast.parse(fh.read(), path)
+
+
+def offenders(is_offence, allowed=()):
+    return [
+        f"{rel}:{node.lineno}"
+        for rel, tree in package_trees()
+        if rel not in allowed
+        for node in ast.walk(tree)
+        if is_offence(node)
+    ]
+
+
+def calls_method(node, *names):
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in names
+    )
+
+
 def test_create_dataframe_only_in_helper():
     """Only local_relation.py may call ``createDataFrame``: a python-list
     local relation runs a Python worker on every action."""
-    root = os.path.dirname(fluxgraph_spark.__file__)
-    offenders = []
-    for dirpath, _dirs, files in os.walk(root):
-        for name in files:
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, name)
-            with open(path, encoding="utf-8") as fh:
-                tree = ast.parse(fh.read(), path)
-            for node in ast.walk(tree):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "createDataFrame"
-                    and os.path.relpath(path, root) != "local_relation.py"
-                ):
-                    offenders.append(f"{os.path.relpath(path, root)}:{node.lineno}")
-    assert not offenders, offenders
+    found = offenders(
+        lambda n: calls_method(n, "createDataFrame"), allowed=("local_relation.py",)
+    )
+    assert not found, found
+
+
+def test_no_environment_reads():
+    """The tier caps are module constants: nothing in the package reads
+    the process environment."""
+
+    def reads_env(node):
+        if isinstance(node, ast.Attribute):
+            return node.attr in ("environ", "getenv", "environb", "getenvb")
+        if isinstance(node, ast.ImportFrom) and node.module == "os":
+            return any(a.name.startswith(("environ", "getenv")) for a in node.names)
+        return False
+
+    found = offenders(reads_env)
+    assert not found, found
+
+
+def test_bounded_collects_only_in_helper():
+    """A ``.limit(<cap> + 1)`` collect is a hand-rolled driver-tier
+    gate: tiers collect through ``local_relation.bounded_arrow``."""
+
+    def limit_plus_one_collect(node):
+        if not calls_method(node, "toArrow", "collect"):
+            return False
+        inner = node.func.value
+        return (
+            calls_method(inner, "limit")
+            and len(inner.args) == 1
+            and isinstance(inner.args[0], ast.BinOp)
+            and isinstance(inner.args[0].op, ast.Add)
+            and isinstance(inner.args[0].right, ast.Constant)
+            and inner.args[0].right.value == 1
+        )
+
+    found = offenders(limit_plus_one_collect, allowed=("local_relation.py",))
+    assert not found, found
+
+
+def test_bounded_arrow_limit_path(spark):
+    df = spark.range(5).select(
+        F.col("id"), F.when(F.col("id") == 2, None).otherwise(F.col("id")).alias("n")
+    )
+    tbl = bounded_arrow(df, 5)
+    assert tbl.num_rows == 5 and tbl.column_names == ["id", "n"]
+    assert bounded_arrow(df, 4) is None
+    for cap in (0, -1):
+        assert bounded_arrow(df, cap) is None
+    # a NULL falls back only in a not_null column
+    assert bounded_arrow(df, 5, not_null=("n",)) is None
+    assert bounded_arrow(df, 5, not_null=("id",)).num_rows == 5
+
+
+def test_bounded_arrow_counted_path(spark):
+    df = spark.range(5)
+    assert bounded_arrow(df, 5, rows=5).num_rows == 5
+    assert bounded_arrow(df, 4, rows=5) is None
+    assert bounded_arrow(df, 5, rows=df.count).column("id").to_pylist() == list(range(5))
+    assert bounded_arrow(df, 4, rows=df.count) is None
+
+    def no_count():
+        raise AssertionError("counted though the cap already decided")
+
+    assert bounded_arrow(df, 0, rows=no_count) is None
+    nulls = spark.createDataFrame([(1,), (None,)], "id long")
+    assert bounded_arrow(nulls, 2, rows=2, not_null=("id",)) is None
+    assert bounded_arrow(nulls, 2, rows=2).num_rows == 2
+
+
+def test_integral_id_gate(spark):
+    df = spark.createDataFrame(
+        [(1, 1, 1, 1, "1", 1.0)],
+        "l long, i int, s short, b byte, str string, d double",
+    )
+    assert integral(df, "l", "i", "s", "b")
+    for col in ("str", "d"):
+        assert not integral(df, col)
+        assert not integral(df, "l", col)
+
+
+def test_bounded_arrow_file_proof_runs_no_job(spark, monkeypatch, tmp_path):
+    path = str(tmp_path / "rows.parquet")
+    spark.range(40).write.parquet(path)
+    df = spark.read.parquet(path)
+    monkeypatch.setattr(LR, "_PROBE_ROW_BYTES", 1)
+    sc = spark.sparkContext
+    group = f"file-proof-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        assert bounded_arrow(df, 1, file_rows=True) is None
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # without the proof the limit collect decides
+        assert bounded_arrow(df, 1) is None
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setJobGroup(None, None)
+    monkeypatch.setattr(LR, "_PROBE_ROW_BYTES", 512)
+    assert bounded_arrow(df, 40, file_rows=True).num_rows == 40

@@ -1,0 +1,162 @@
+"""Spark job counts of the driver-tier decisions.
+
+Each tier decides on the driver whether an operator's input fits one
+bounded collect.  These pins count the Spark jobs a decision submits
+(``statusTracker`` job ids under a job group), so a change to how the
+tiers collect keeps running the same actions.  The counts are the ones
+the hand-rolled collects ran before they moved behind
+``local_relation.bounded_arrow``, except where a test says why not."""
+
+import datetime
+import uuid
+
+import pytest
+
+from fluxgraph_spark import TemporalGraph
+from fluxgraph_spark import local_relation as LR
+from fluxgraph_spark.functions import dedup, similarity
+from fluxgraph_spark.operators import analytics as AN
+from fluxgraph_spark.operators import gremlin as GL
+
+
+def jobs(spark, fn):
+    """(fn(), number of Spark jobs fn submitted)."""
+    sc = spark.sparkContext
+    group = f"tier-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def edge_files(spark, tmp_path):
+    """A 40-edge chain plus a triangle, read back from parquet as the
+    as-of workloads read their edges."""
+    rows = [(i, i + 1) for i in range(1, 40)] + [(100, 101), (101, 102), (102, 100)]
+    path = str(tmp_path / "edges.parquet")
+    spark.createDataFrame(rows, "src long, dst long").coalesce(2).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_components_tier_jobs(spark, edge_files, monkeypatch):
+    monkeypatch.setattr(AN, "CC_DRIVER_EDGE_MAX", 1 << 18)
+    for op in (AN.connected_components, AN.connected_components_star):
+        out, n = jobs(spark, lambda: op(edge_files))
+        assert n == 1, op.__name__
+        assert out.count() == 43
+
+
+def test_closeness_tier_jobs(spark, edge_files, monkeypatch):
+    sources = spark.range(1, 4)
+    monkeypatch.setattr(AN, "BFS_DRIVER_EDGE_MAX", 1 << 21)
+    out, n = jobs(spark, lambda: AN._closeness_driver_tier(edge_files, sources, 3, False))
+    assert out is not None and n == 2
+    # sources over their cap: the edge list is never collected
+    monkeypatch.setattr(AN, "_BFS_DRIVER_SOURCE_MAX", 2)
+    out, n = jobs(spark, lambda: AN._closeness_driver_tier(edge_files, sources, 3, False))
+    assert out is None and n == 1
+
+
+def test_walk_tier_jobs(spark, edge_files, monkeypatch):
+    seeds = spark.range(1, 3)
+    monkeypatch.setattr(AN, "WALK_DRIVER_EDGE_MAX", 1 << 18)
+    out, n = jobs(spark, lambda: AN._walk_driver_collect(edge_files, seeds))
+    assert out is not None and n == 2
+
+
+def test_walk_tier_checks_seeds_before_the_edge_collect(spark, edge_files, monkeypatch):
+    """An over-cap seed set falls back after the seed collect alone (the
+    edge list used to be collected first: two jobs)."""
+    seeds = spark.range(1, 3)
+    monkeypatch.setattr(AN, "WALK_DRIVER_EDGE_MAX", 1 << 18)
+    monkeypatch.setattr(AN, "_WALK_DRIVER_SOURCE_MAX", 1)
+    out, n = jobs(spark, lambda: AN._walk_driver_collect(edge_files, seeds))
+    assert out is None and n == 1
+
+
+def test_job_free_gates_run_before_the_first_job(spark, edge_files, toy_graph, monkeypatch):
+    """A tier whose second input is over its cap (by the cap alone, or by
+    its file bytes) falls back before collecting the first input."""
+    sources = spark.range(1, 4)
+    for cap_attr, tier in (
+        ("BFS_DRIVER_EDGE_MAX", lambda: AN._closeness_driver_tier(edge_files, sources, 3, False)),
+        ("WALK_DRIVER_EDGE_MAX", lambda: AN._walk_driver_collect(edge_files, sources)),
+    ):
+        with monkeypatch.context() as m:
+            m.setattr(AN, cap_attr, 0)
+            assert jobs(spark, tier) == (None, 0), cap_attr
+        with monkeypatch.context() as m:
+            m.setattr(LR, "_PROBE_ROW_BYTES", 1)
+            m.setattr(AN, cap_attr, 1)
+            assert jobs(spark, tier) == (None, 0), cap_attr
+    g, _, _ = toy_graph
+    v_df, e_df = g.vertices_df(), g.edges_df()
+    monkeypatch.setattr(GL, "GREMLIN_DRIVER_EDGE_MAX", 0)
+    assert jobs(spark, lambda: GL._tier_collect_graph(v_df, e_df)) == (None, 0)
+
+
+def test_gremlin_loop_tier_jobs(spark, toy_graph, monkeypatch):
+    g, vs, _ = toy_graph
+    v_df, e_df = g.vertices_df(), g.edges_df()
+    m = vs["marko"].id
+    monkeypatch.setattr(GL, "GREMLIN_DRIVER_EDGE_MAX", 1 << 21)
+    # the whole prefix replays: the vertex and edge collects, count-first
+    script = f"g.v({m}).out.loop(1){{it.object.lang != 'java'}}.values('name')"
+    out, n = jobs(spark, lambda: GL.run(script, v_df, e_df))
+    assert n == 7
+    assert sorted(r[0] for r in out.collect()) == ["lop", "lop", "ripple"]
+    # a frontier from Spark: the graph collects, then the frontier collect
+    calls = []
+    tier = GL._fixpoint_driver_tier
+    monkeypatch.setattr(
+        GL, "_fixpoint_driver_tier", lambda *a: calls.append(1) or tier(*a)
+    )
+    script = f"g.v({m}).outE.inV.out.loop(1){{it.object.lang != 'java'}}.values('name')"
+    out, n = jobs(spark, lambda: GL.run(script, v_df, e_df))
+    assert n == 12
+    assert sorted(r[0] for r in out.collect()) == ["lop", "ripple"]
+    assert calls
+
+
+def test_dataframe_graph_first_checkpoint_jobs(spark):
+    t0 = datetime.datetime(2021, 1, 1)
+    log = spark.createDataFrame(
+        [(i, t0 + datetime.timedelta(hours=i)) for i in range(1, 6)],
+        "tx_id long, tx_time timestamp",
+    )
+    g = TemporalGraph.from_dataframes(
+        spark,
+        spark.createDataFrame([(1,)], "id long"),
+        spark.createDataFrame([(1, 1, 1, "a")], "id long, src long, dst long, label string"),
+        log,
+    )
+    _, n = jobs(spark, lambda: g.set_checkpoint_time(t0 + datetime.timedelta(hours=2)))
+    assert n == 2 and g._checkpoint_tx == 2
+
+
+def test_lsh_band_tier_jobs(spark):
+    banded = spark.createDataFrame(
+        [(i, b, f"k{i // 2}") for i in range(8) for b in range(3)],
+        "id long, band int, bucket string",
+    ).localCheckpoint(eager=True)
+    out, n = jobs(spark, lambda: dedup._banded_pairs_driver(banded, None, 24))
+    assert out == [(0, 1), (2, 3), (4, 5), (6, 7)] and n == 1
+    out, n = jobs(spark, lambda: dedup._banded_pairs_driver(banded, None))
+    assert out == [(0, 1), (2, 3), (4, 5), (6, 7)] and n == 3
+
+
+def test_ivf_centroid_collect_jobs(spark):
+    vectors = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 1.0])], "id long, vec array<double>")
+    cents = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(4)], "centroid_id int, cvec array<double>"
+    )
+    out, n = jobs(spark, lambda: similarity.ivf_assign(vectors, cents))
+    # one Arrow limit collect; the row collect it replaced ran an
+    # incremental take, two jobs over these four in-memory partitions
+    assert n == 1
+    assert sorted(map(tuple, out.collect())) == [(1, 3), (2, 0)]
