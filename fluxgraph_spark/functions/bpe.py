@@ -187,20 +187,6 @@ def bpe_train(
     return merges, state
 
 
-def bpe_apply(words: DataFrame, merges: list[tuple[int, str, str, int]]) -> DataFrame:
-    """Encode a (word, cnt) table with an already-learned merge list —
-    the inference path for NEW text against a stored vocabulary.  Applies
-    merges in rank order; same greedy semantics as training."""
-    state = initial_state(words).persist()
-    state = state.localCheckpoint()
-    for _rank, left, right, _pc in merges:
-        nxt_state = merge_pair(state, left, right).persist()
-        nxt_state = nxt_state.localCheckpoint()
-        state.unpersist()
-        state = nxt_state
-    return state
-
-
 def tokens_per_word(state: DataFrame) -> DataFrame:
     """(word, n_tokens) from a symbol state — the join key for corpus
     token accounting (one row per distinct word, broadcast-friendly)."""

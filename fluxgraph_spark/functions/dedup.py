@@ -207,8 +207,8 @@ def shingle_array_table(
     :func:`shingle_table`: the same distinct nonempty grams, never
     exploded.  Per input row, ``explode(shingles)`` here equals that
     row's :func:`shingle_table` rows exactly; with unique ids the two
-    forms are interchangeable (callers with duplicate ids must group —
-    see :func:`minhash_lsh_dedup_reproducible`'s uniqueness gate).
+    forms are interchangeable (callers with duplicate ids must group the
+    arrays per id, as :func:`minhash_lsh_dedup_reproducible` does).
     Rows whose gram set is empty are dropped, mirroring the exploded
     form producing no rows for them."""
     grams = _grams_expr(text_col, n)
@@ -272,14 +272,19 @@ def band_table(
     ).select("id", "bb.band", "bb.bucket")
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    num_hashes: int = 16,
-    bands: int = 4,
+def pairs_from_bands(
+    banded: DataFrame,
     max_bucket_size: "int | None" = None,
+    max_candidates_per_doc: "int | None" = None,
 ) -> DataFrame:
-    """Band the signature, bucket-join: pairs (id_a < id_b) sharing at
-    least one band.  Equi-join on (band, band_hash) — the only shuffle.
+    """Candidate pairs (id_a < id_b) sharing at least one band bucket of
+    an (id, band, bucket) band table.  Equi-join on (band, bucket) — the
+    only shuffle.  A PERSISTED band index (sources/bucketed.py
+    ``DedupIndex``) bucketed by (band, bucket) feeds it directly: the
+    self-join and the hot-bucket stats groupBy then run shuffle-free.
+    The table is consumed on both join sides, so callers pass a
+    materialized one (under AQE each join child otherwise recomputes
+    the whole shingle -> minhash -> banding lineage).
 
     Hot-bucket skew guard (``max_bucket_size``): a bucket of m members
     yields m*(m-1)/2 pairs in ONE reducer — at corpus scale a boilerplate
@@ -291,41 +296,21 @@ def lsh_candidate_pairs(
     clustering (connected components over the pairs) is unchanged, while
     direct pair listings lose only intra-bucket pairs that the remaining
     bands or the verify step would re-find.  Default None = exact
-    all-pairs behavior (oracle-replayable)."""
-    banded = band_table(signatures, num_hashes=num_hashes, bands=bands)
-    # the band self-join consumes banded on BOTH sides; under AQE the two
-    # join children materialize as independent stages that each recompute
-    # the whole shingle -> minhash -> banding lineage upstream (measured:
-    # two concurrent corpus scans per run at sf0.1, the minhash being the
-    # dominant term).  Materialize the small (id, band, bucket) table
-    # ONCE and let both sides (and the hot-bucket stats pass) read it
-    # back — the checkpoint holds bands x corpus triples, the same order
-    # the join must shuffle anyway.  The checkpoint ESCAPES through the
-    # lazily returned pair frame, so its blocks are freed by the
-    # ContextCleaner when the result's lineage is dropped; entry points
-    # that materialize the pairs (minhash_lsh_dedup* / DedupIndex)
-    # free their own non-escaping checkpoints explicitly instead
-    # (:func:`free_local_checkpoint`).
-    banded = banded.localCheckpoint(eager=True)
-    return pairs_from_bands(banded, max_bucket_size=max_bucket_size)
+    all-pairs behavior (oracle-replayable).
 
-
-def pairs_from_bands(
-    banded: DataFrame, max_bucket_size: "int | None" = None
-) -> DataFrame:
-    """Candidate pairs from an (id, band, bucket) band table — the join
-    half of :func:`lsh_candidate_pairs`, split out so a PERSISTED band
-    index (sources/bucketed.py ``DedupIndex``) can feed it directly:
-    with the index table bucketed by (band, bucket), both the self-join
-    and the hot-bucket stats groupBy run shuffle-free."""
+    Per-document budget (``max_candidates_per_doc``): candidates rank
+    per side by shared-band count DESC then partner id ASC, and a pair
+    survives if it is within budget on EITHER side (see
+    :func:`minhash_lsh_dedup_reproducible`).  The two bounds are
+    exclusive."""
+    if max_bucket_size is not None and max_candidates_per_doc is not None:
+        raise ValueError("max_bucket_size and max_candidates_per_doc are exclusive")
+    star = None
     if max_bucket_size is not None:
         stats = banded.groupBy("band", "bucket").agg(
             F.count(F.lit(1)).alias("__n"), F.min("id").alias("__rep")
         )
         banded = banded.join(stats, ["band", "bucket"])
-        small = banded.where(F.col("__n") <= max_bucket_size).select(
-            "id", "band", "bucket"
-        )
         # oversized buckets: member <-> representative star, linear in m
         star = (
             banded.where(
@@ -333,43 +318,41 @@ def pairs_from_bands(
             )
             .select(F.col("__rep").alias("id_a"), F.col("id").alias("id_b"))
         )
-        a = small.alias("a")
-        b = small.alias("b")
-        return (
-            a.join(b, ["band", "bucket"])
-            .where(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .unionByName(star)
-            .dropDuplicates()
+        banded = banded.where(F.col("__n") <= max_bucket_size).select(
+            "id", "band", "bucket"
         )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
+    a, b = banded.alias("a"), banded.alias("b")
+    pairs = (
         a.join(b, ["band", "bucket"])
         .where(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates()
     )
-
-
-def minhash_similarity(
-    signatures: DataFrame, pairs: DataFrame, num_hashes: int = 16
-) -> DataFrame:
-    """Estimated Jaccard = fraction of matching signature components,
-    for candidate pairs only."""
-    sa = signatures.alias("sa")
-    sb = signatures.alias("sb")
-    matches = sum(
-        F.when(F.col(f"sa.mh_{i}") == F.col(f"sb.mh_{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
+    if max_candidates_per_doc is None:
+        if star is not None:
+            pairs = pairs.unionByName(star)
+        return pairs.dropDuplicates()
+    ev = (
+        # Key the aggregation's exchange by id_a ALONE: hash(id_a)
+        # still clusters (id_a, id_b) for the count, and the first
+        # budget window (partitionBy id_a) then reuses the SAME
+        # exchange — the evidence table crosses the wire twice
+        # (id_a, then id_b for the second window) instead of three
+        # times.  Measured 3.47 -> 2.06 s on the sf0.1 candidate
+        # stream, decision-identical survivor set.
+        pairs.repartition("id_a")
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("__n_ev"))
     )
+    w_a = W.partitionBy("id_a").orderBy(F.desc("__n_ev"), F.asc("id_b"))
+    w_b = W.partitionBy("id_b").orderBy(F.desc("__n_ev"), F.asc("id_a"))
     return (
-        pairs.join(sa, pairs["id_a"] == F.col("sa.id"))
-        .join(sb, pairs["id_b"] == F.col("sb.id"))
-        .select(
-            "id_a", "id_b",
-            (matches / F.lit(float(num_hashes))).alias("est_jaccard"),
+        ev.withColumn("__ra", F.row_number().over(w_a))
+        .withColumn("__rb", F.row_number().over(w_b))
+        .where(
+            (F.col("__ra") <= max_candidates_per_doc)
+            | (F.col("__rb") <= max_candidates_per_doc)
         )
+        .select("id_a", "id_b")
     )
 
 
@@ -420,50 +403,7 @@ def _jaccard_pairs(
     """:func:`jaccard_pairs` and the eager checkpoint its blocked verify
     escapes through the lazy result (None unblocked), for callers that
     free it once that result is materialized."""
-    arrs = None
-    if block is not None:
-        if broadcast_block is None:
-            broadcast_block = block.is_cached and block.count() <= 1_000_000
-        bcast = F.broadcast if broadcast_block else (lambda d: d)
-        ids = (
-            block.select(F.col("id_a").alias("id"))
-            .unionByName(block.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        # candidate cut: the big shingle table is never shuffled for the
-        # verify when the candidate set broadcasts
-        sh = shingles.join(bcast(ids), "id", "left_semi")
-        arrs = sh.groupBy("id").agg(F.collect_set("shingle").alias("__arr"))
-        # arrs feeds BOTH sides of the pair join — materialize it once
-        # or the semi-join + collect_set shuffle runs twice (measured
-        # 3.5s -> 2.1s on the d_lsh_budget verify at sf0.1; the saving
-        # is the whole second pass over the candidate shingles at
-        # scale).  Escapes through the lazy result — blocks freed by
-        # the caller or by the ContextCleaner with the result's lineage.
-        arrs = arrs.localCheckpoint(eager=True)
-        out = (
-            bcast(block)
-            .join(
-                arrs.select(F.col("id").alias("id_a"), F.col("__arr").alias("__a")),
-                "id_a",
-            )
-            .join(
-                arrs.select(F.col("id").alias("id_b"), F.col("__arr").alias("__b")),
-                "id_b",
-            )
-            .select(
-                "id_a", "id_b",
-                F.size(F.array_intersect("__a", "__b")).alias("n_inter"),
-                F.size("__a").alias("n_a"),
-                F.size("__b").alias("n_b"),
-            )
-            # the exploded two-join form only ever produced a row when at
-            # least one shingle matched; drop zero-overlap candidates
-            # (e.g. LSH band collisions) so blocked and unblocked paths
-            # agree even at threshold=0.0
-            .where(F.col("n_inter") > 0)
-        )
-    else:
+    if block is None:
         sizes = shingles.groupBy("id").agg(F.count("*").alias("n_sh"))
         a = shingles.alias("a")
         b = shingles.alias("b")
@@ -474,16 +414,36 @@ def _jaccard_pairs(
             .agg(F.count("*").alias("n_inter"))
             .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
             .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+            .select(
+                "id_a", "id_b",
+                F.round(
+                    F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
+                ).alias("jaccard"),
+            )
         )
-    out = out.select(
-        "id_a", "id_b",
-        F.round(
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
-        ).alias("jaccard"),
+        if threshold > 0:
+            out = out.where(F.col("jaccard") >= threshold)
+        return out, None
+    if broadcast_block is None:
+        broadcast_block = block.is_cached and block.count() <= 1_000_000
+    bcast = F.broadcast if broadcast_block else (lambda d: d)
+    ids = (
+        block.select(F.col("id_a").alias("id"))
+        .unionByName(block.select(F.col("id_b").alias("id")))
+        .distinct()
     )
-    if threshold > 0:
-        out = out.where(F.col("jaccard") >= threshold)
-    return out, arrs
+    # candidate cut: the big shingle table is never shuffled for the
+    # verify when the candidate set broadcasts
+    sh = shingles.join(bcast(ids), "id", "left_semi")
+    arrs = sh.groupBy("id").agg(F.collect_set("shingle").alias("shingles"))
+    # arrs feeds BOTH sides of the pair join — materialize it once
+    # or the semi-join + collect_set shuffle runs twice (measured
+    # 3.5s -> 2.1s on the d_lsh_budget verify at sf0.1; the saving
+    # is the whole second pass over the candidate shingles at
+    # scale).  Escapes through the lazy result — blocks freed by
+    # the caller or by the ContextCleaner with the result's lineage.
+    arrs = arrs.localCheckpoint(eager=True)
+    return _jaccard_pairs_from_arrays(arrs, block, threshold, broadcast_block), arrs
 
 
 def containment_pairs(
@@ -676,19 +636,6 @@ def shingle_arrays(
     )
 
 
-def _minhash_fold(num_hashes: int) -> Column:
-    """All ``num_hashes`` signature components in ONE traversal of the
-    ``shingles`` array: fold with a zip_with(least) over the per-shingle
-    seeded-xxhash vector.  ~2× faster than num_hashes separate
-    array_min(transform(...)) walks."""
-    hashes = ", ".join(f"xxhash64(s, {i})" for i in range(num_hashes))
-    return F.expr(
-        f"""aggregate(shingles,
-        array_repeat(cast({2 ** 63 - 1} as bigint), {num_hashes}),
-        (acc, s) -> zip_with(acc, array({hashes}), (x, y) -> least(x, y)))"""
-    ).alias("mh")
-
-
 def minhash_lsh_dedup(
     df: DataFrame,
     id_col: str,
@@ -699,70 +646,18 @@ def minhash_lsh_dedup(
     threshold: float = 0.5,
     max_bucket_size: "int | None" = None,
 ) -> DataFrame:
-    """End-to-end near-dup pairs: shingle -> minhash -> LSH band join ->
-    exact-Jaccard verify.  The 100 TB shape:
-
-    * shingles and signatures are narrow per-document array maps — the
-      corpus is NEVER exploded to (id, shingle) rows;
-    * the only corpus-wide shuffle is the band-bucket equi-join, carrying
-      (id, band, bucket) triples;
-    * verify joins the candidate pairs (≪ corpus) back to the shingle
-      arrays and computes exact Jaccard with array_intersect — per-pair
-      work proportional to the two documents, not the corpus."""
-    sh = shingle_arrays(df, id_col, text_col, n=n)
-    sig = sh.select("id", "shingles", _minhash_fold(num_hashes)).persist()
-    # banding consumes the flat mh_i columns — extracted from the cached
-    # signature array, not recomputed
-    sig_cols = sig.select(
-        "id",
-        *[F.col("mh")[i].alias(f"mh_{i}") for i in range(num_hashes)],
+    """End-to-end near-dup pairs (id_a, id_b, jaccard) on the xxhash64
+    hash family: hashed shingle arrays (:func:`shingle_arrays`) and
+    seeded-xxhash64 signatures (:func:`fast_hash`) — no string md5 per
+    gram or component, ~2-4x cheaper than the md5 family, but not
+    replayable by an external SQL engine.  The pipeline past the gram
+    arrays is :func:`minhash_lsh_dedup_reproducible`'s, driver tiers
+    included; ``max_bucket_size`` is :func:`pairs_from_bands`' hot-bucket
+    star cap."""
+    return _minhash_lsh(
+        df, id_col, text_col, n, num_hashes, bands, threshold,
+        shingle_arrays, fast_hash, max_bucket_size=max_bucket_size,
     )
-    # candidates are consumed three times (id cut + two pair joins) —
-    # persist so the banding join runs once
-    cand = lsh_candidate_pairs(
-        sig_cols, num_hashes=num_hashes, bands=bands,
-        max_bucket_size=max_bucket_size,
-    ).persist()
-    # the broadcast hints below are only safe while the candidate set is
-    # actually small — at corpus scale pair counts track near-dup
-    # density and can reach billions.  The persist materializes cand
-    # anyway, so this count is a cheap scalar probe; above the cutoff the
-    # joins fall back to AQE's runtime choice (shuffle or broadcast).
-    small = cand.count() <= 1_000_000
-    bcast = F.broadcast if small else (lambda d: d)
-    # cut the (wide: shingle arrays) signature table down to candidate
-    # ids BEFORE the verify joins — the arrays of non-candidates never
-    # enter a shuffle
-    ids = (
-        cand.select(F.col("id_a").alias("id"))
-        .unionByName(cand.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    sh_cand = sig.select("id", "shingles").join(bcast(ids), "id", "left_semi")
-    a = sh_cand.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = sh_cand.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    out = (
-        bcast(cand)
-        .join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                n_inter
-                / (F.size("sh_a") + F.size("sh_b") - n_inter),
-                6,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    # candidate-bounded pair table: materialize, cut lineage, release
-    # the signature/candidate caches (the corpus_dedupe pattern)
-    out = out.localCheckpoint(eager=True)
-    sig.unpersist()
-    cand.unpersist()
-    return out
 
 
 def edit_distance_pairs(
@@ -941,17 +836,19 @@ def dedupe_near(
     clustering rounds is a narrow map; non-duplicate documents (the
     overwhelming majority) never enter a shuffle wider than their
     (id, band, bucket) triples."""
-    pairs = minhash_lsh_dedup(
+    return _drop_clustered(df, id_col, minhash_lsh_dedup(
         df, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands,
         threshold=threshold, max_bucket_size=max_bucket_size,
-    )
-    clusters = near_dup_clusters(pairs)
-    # cluster label IS the min id in the cluster — drop every clustered
-    # doc that isn't its cluster's minimum, keep everything unclustered
-    losers = clusters.where(F.col("id") != F.col("cluster")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
+    ))
+
+
+def _drop_clustered(df: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
+    """``df`` without the near-dups ``pairs`` cluster together: the
+    cluster label IS the min id in the cluster, so every clustered doc
+    that isn't its cluster's minimum drops and everything unclustered
+    stays."""
+    losers = near_dup_clusters(pairs).where(F.col("id") != F.col("cluster"))
+    return df.join(losers.select(F.col("id").alias(id_col)), id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -982,29 +879,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
         for b in range(bits)
     )
     return sums.select("id", F.expr(f"cast({assemble} as bigint)").alias("simhash"))
-
-
-def simhash_near_pairs(sim: DataFrame, max_hamming: int = 3, prefix_bits: int = 16) -> DataFrame:
-    """Near-dup pairs by Hamming distance on simhash.
-
-    Blocking: equi-join on the high ``prefix_bits`` (near-dups with all
-    differing bits in the low half are found; standard multi-probe trades
-    recall for join fan-in).  Hamming via bit_count(xor)."""
-    blocked = sim.withColumn("blk", F.shiftright(F.col("simhash"), 32 - prefix_bits))
-    a = blocked.alias("a")
-    b = blocked.alias("b")
-    return (
-        a.join(b, "blk")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1281,7 +1155,7 @@ def minhash_lsh_dedup_reproducible(
 ) -> DataFrame:
     """End-to-end MinHash+LSH near-dup pairs with the md5-derived hash
     family: bit-for-bit replayable by an external SQL engine, unlike the
-    xxhash64 fast path of :func:`minhash_lsh_dedup`.  Use this flavor
+    xxhash64 family of :func:`minhash_lsh_dedup`.  Use this flavor
     when the pipeline result must be auditable across engines.
 
     ``max_candidates_per_doc`` caps the verify work per document — the
@@ -1310,16 +1184,29 @@ def minhash_lsh_dedup_reproducible(
     numpy (:func:`_banded_pairs_driver`), and when the gram arrays are
     also bounded the Jaccard verify runs in-process too
     (:func:`_jaccard_pairs_driver`) — both decision-identical and
-    parity-pinned in pytest.  Past the caps the distributed forms run
-    unchanged; duplicate/null document ids (whose groupBy union
-    semantics the per-row array form does not model) take the pre-r13
-    exploded implementation."""
+    parity-pinned in pytest.  Past the caps the distributed forms
+    (:func:`pairs_from_bands`, :func:`_jaccard_pairs_from_arrays`) run.
+    Duplicate document ids verify the UNION of their rows' grams: the
+    gram table is regrouped once per id when the banding shows them."""
+    return _minhash_lsh(
+        df, id_col, text_col, n, num_hashes, bands, threshold,
+        shingle_array_table, None,
+        max_candidates_per_doc=max_candidates_per_doc,
+    )
+
+
+def _minhash_lsh(
+    df, id_col, text_col, n, num_hashes, bands, threshold, grams, hash_fn,
+    max_bucket_size=None, max_candidates_per_doc=None,
+):
+    """The one MinHash-LSH pipeline behind both hash families: ``grams``
+    builds the per-document gram-array table, ``hash_fn`` is
+    :func:`minhash_signatures`' component hash; everything downstream of
+    the checkpointed gram arrays is shared."""
     from concurrent.futures import ThreadPoolExecutor
 
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    arr = shingle_array_table(base, "id", "text", n=n).localCheckpoint(
-        eager=True
-    )
+    arr = grams(base, "id", "text", n=n).localCheckpoint(eager=True)
 
     # every checkpoint and cache is released on the failure path too;
     # the success paths free theirs once the result is materialized
@@ -1344,7 +1231,7 @@ def minhash_lsh_dedup_reproducible(
             # the distributed self-join (the AQE twin-subtree trap)
             sig = minhash_signatures(
                 arr.select("id", F.explode("shingles").alias("shingle")),
-                num_hashes=num_hashes,
+                num_hashes=num_hashes, hash_fn=hash_fn,
             )
             b = band_table(sig, num_hashes=num_hashes, bands=bands)
             b = b.localCheckpoint(eager=True)
@@ -1357,21 +1244,24 @@ def minhash_lsh_dedup_reproducible(
             n_rows, n_grams = f_stats.result()
             banded, n_band = f_band.result()
         if n_band != n_rows * bands:
-            # duplicate ids (sig's groupBy merged rows): the per-row array
-            # verify would be wrong — keep the exploded path's semantics
-            free_local_checkpoint(banded)
+            # duplicate ids: the signature groupBy already banded each
+            # id's union of grams; give the verify the same union (a
+            # row without grams has no array row, so adds none).  The
+            # gram count stays the per-row sum, an upper bound.
+            grouped = arr.groupBy("id").agg(
+                F.array_distinct(F.flatten(F.collect_list("shingles"))).alias("shingles")
+            ).localCheckpoint(eager=True)
+            checkpoints.append(grouped)
             free_local_checkpoint(arr)
-            return _minhash_lsh_reproducible_exploded(
-                df, id_col, text_col, n, num_hashes, bands, threshold,
-                max_candidates_per_doc,
-            )
+            arr = grouped
         spark = df.sparkSession
         id_t = arr.schema["id"].dataType
         # the candidate selection collect and the verify's gram collect are
         # independent too — overlap them
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_pairs = pool.submit(
-                _banded_pairs_driver, banded, max_candidates_per_doc, n_band
+                _banded_pairs_driver, banded, max_candidates_per_doc, n_band,
+                max_bucket_size,
             )
             f_tbl = (
                 pool.submit(arr.toArrow)
@@ -1403,12 +1293,9 @@ def minhash_lsh_dedup_reproducible(
             )
             n_cand = len(pairs_local)
         else:
-            if max_candidates_per_doc is None:
-                cand = pairs_from_bands(banded).persist()
-            else:
-                cand = _budgeted_pairs_from_bands(
-                    banded, max_candidates_per_doc
-                ).persist()
+            cand = pairs_from_bands(
+                banded, max_bucket_size, max_candidates_per_doc
+            ).persist()
             cached.append(cand)
             n_cand = cand.count()
         out = _jaccard_pairs_from_arrays(
@@ -1497,15 +1384,17 @@ def _jaccard_pairs_driver(tbl, pairs_local, threshold, id_t, spark):
 
 
 def _banded_pairs_driver(
-    banded: DataFrame, max_candidates_per_doc, n_band: "int | None" = None
+    banded: DataFrame, max_candidates_per_doc, n_band: "int | None" = None,
+    max_bucket_size: "int | None" = None,
 ):
-    """In-process replay of the candidate selection over a MATERIALIZED
+    """In-process replay of :func:`pairs_from_bands` over a MATERIALIZED
     (id, band, bucket) table: bucket self-pairing (a.id < b.id, one row
     per shared band), evidence counts, and — with a budget — the two
     row_number windows ((-n_ev, partner) order, survive-on-either-side),
     or — without one — the distinct-pair set.  Returns a sorted list of
     (id_a, id_b) tuples, or None for the distributed path (over the
-    caps, or id types the replay does not model).  Decision-identical
+    caps, a bucket over ``max_bucket_size`` — the star fallback is not
+    replayed — or id types the replay does not model).  Decision-identical
     by construction: every step is integer arithmetic over the same
     collected rows the joins would shuffle."""
     if not integral(banded, "id"):
@@ -1538,6 +1427,8 @@ def _banded_pairs_driver(
     g, sid = gkey[order], code[order]
     starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
     sizes = np.diff(np.r_[starts, g.size])
+    if max_bucket_size is not None and sizes.max(initial=0) > max_bucket_size:
+        return None
     n_pairs = int((sizes * (sizes - 1) // 2).sum())
     if n_pairs > _LSH_DRIVER_PAIRS_MAX:
         return None
@@ -1583,11 +1474,11 @@ def _jaccard_pairs_from_arrays(
     threshold: float,
     broadcast_block: bool,
 ) -> DataFrame:
-    """:func:`jaccard_pairs`'s blocked verify over a per-document gram
-    ARRAY table (id, shingles): the arrays are already collected, so
-    the semi-join + collect_set shuffle of the exploded form never
-    happens — candidates join straight to two array rows.  Output is
-    bit-identical (same distinct sets, same counts, same rounding)."""
+    """The distributed blocked Jaccard verify over a per-document gram
+    ARRAY table (id, shingles): candidates join straight to two array
+    rows.  :func:`jaccard_pairs` feeds it the arrays it collects from a
+    shingle table; the MinHash-LSH pipeline feeds its gram-array
+    checkpoint, so no collect_set shuffle runs there."""
     bcast = F.broadcast if broadcast_block else (lambda d: d)
     out = (
         bcast(block)
@@ -1605,8 +1496,9 @@ def _jaccard_pairs_from_arrays(
             F.size("__a").alias("n_a"),
             F.size("__b").alias("n_b"),
         )
-        # the exploded two-join form only ever produced a row when at
-        # least one shingle matched (see jaccard_pairs)
+        # the unblocked shingle self-join only yields a pair with at
+        # least one shared shingle: drop zero-overlap candidates (e.g.
+        # LSH band collisions) so both forms agree even at threshold 0
         .where(F.col("n_inter") > 0)
         .select(
             "id_a", "id_b",
@@ -1618,81 +1510,6 @@ def _jaccard_pairs_from_arrays(
     )
     if threshold > 0:
         out = out.where(F.col("jaccard") >= threshold)
-    return out
-
-
-def _budgeted_pairs_from_bands(
-    banded: DataFrame, max_candidates_per_doc: int
-) -> DataFrame:
-    """The distributed budget selection over a materialized band table
-    (the pre-r13 shape, now the over-cap fallback of
-    :func:`_banded_pairs_driver`)."""
-    a, b = banded.alias("a"), banded.alias("b")
-    ev = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        # Key the aggregation's exchange by id_a ALONE: hash(id_a)
-        # still clusters (id_a, id_b) for the count, and the first
-        # budget window (partitionBy id_a) then reuses the SAME
-        # exchange — the evidence table crosses the wire twice
-        # (id_a, then id_b for the second window) instead of three
-        # times.  Measured 3.47 -> 2.06 s on the sf0.1 candidate
-        # stream, decision-identical survivor set.
-        .repartition("id_a")
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__n_ev"))
-    )
-    w_a = W.partitionBy("id_a").orderBy(F.desc("__n_ev"), F.asc("id_b"))
-    w_b = W.partitionBy("id_b").orderBy(F.desc("__n_ev"), F.asc("id_a"))
-    return (
-        ev.withColumn("__ra", F.row_number().over(w_a))
-        .withColumn("__rb", F.row_number().over(w_b))
-        .where(
-            (F.col("__ra") <= max_candidates_per_doc)
-            | (F.col("__rb") <= max_candidates_per_doc)
-        )
-        .select("id_a", "id_b")
-    )
-
-
-def _minhash_lsh_reproducible_exploded(
-    df, id_col, text_col, n, num_hashes, bands, threshold,
-    max_candidates_per_doc,
-):
-    """The pre-r13 exploded implementation — serves inputs with
-    duplicate/null document ids, whose per-id gram-set UNION semantics
-    the array form does not model."""
-    sh = shingle_table(df, id_col, text_col, n=n).persist()
-    sig = minhash_signatures(sh, num_hashes=num_hashes)
-    banded = None
-    if max_candidates_per_doc is None:
-        cand = lsh_candidate_pairs(
-            sig, num_hashes=num_hashes, bands=bands
-        ).persist()
-    else:
-        banded = band_table(sig, num_hashes=num_hashes, bands=bands)
-        # both sides of the evidence self-join: materialize the banding
-        # once (see lsh_candidate_pairs — the lazy form recomputes the
-        # minhash lineage per join child)
-        banded = banded.localCheckpoint(eager=True)
-        cand = _budgeted_pairs_from_bands(
-            banded, max_candidates_per_doc
-        ).persist()
-    n_cand = cand.count()
-    out = jaccard_pairs(
-        sh, block=cand, threshold=threshold,
-        broadcast_block=n_cand <= 1_000_000,
-    )
-    # candidate-bounded pair table: materialize, cut lineage, release
-    # the shingle/candidate caches (the corpus_dedupe pattern).  The
-    # banding checkpoint is freed only NOW: an evicted cand cache
-    # recomputes through it until out is materialized.
-    out = out.localCheckpoint(eager=True)
-    sh.unpersist()
-    cand.unpersist()
-    if banded is not None:
-        free_local_checkpoint(banded)
     return out
 
 
@@ -1715,15 +1532,10 @@ def dedupe_near_reproducible(
     converged star labels equal min-reachable-id).  Use the xxhash64
     :func:`dedupe_near` when cross-engine audit is not required; its
     plan shape is identical and each stage ~2-4× cheaper."""
-    pairs = minhash_lsh_dedup_reproducible(
+    return _drop_clustered(df, id_col, minhash_lsh_dedup_reproducible(
         df, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands,
         threshold=threshold,
-    )
-    clusters = near_dup_clusters(pairs)
-    losers = clusters.where(F.col("id") != F.col("cluster")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
+    ))
 
 
 def semantic_dedupe(
@@ -2306,7 +2118,7 @@ def dhash_near_dups(
     band_value), exact verify on the survivors — the image twin of the
     MinHash-LSH band join, with the same skew caveat: a constant band
     value across a huge image family (e.g. letterboxed black bars) is a
-    hot bucket; cap or pre-split as in lsh_candidate_pairs."""
+    hot bucket; cap or pre-split as in pairs_from_bands."""
     if not 0 <= max_hamming <= 7:
         raise ValueError(
             f"max_hamming must be in [0, 7] for the 8-band pigeonhole "
@@ -2318,7 +2130,7 @@ def dhash_near_dups(
     # Python pipeline, measured as two ~equal mapInPandas subtrees per
     # run on m_dhash_dups.  One row per image: checkpoint it (escapes
     # through the lazy result — ContextCleaner frees it, the
-    # lsh_candidate_pairs pattern); callers that already checkpointed
+    # verify-arrays pattern of jaccard_pairs); callers that already checkpointed
     # (m_dhash_survivors shares the table with its final join) skip the
     # copy.
     if not is_checkpoint_root(hashes):

@@ -94,17 +94,6 @@ def cms_build(
     )
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Counter-wise sum of two sketches built with the SAME depth/width
-    — the associative merge that makes per-partition / per-day sketches
-    composable."""
-    return (
-        a.unionByName(b)
-        .groupBy("j", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def cms_estimate(
     cms: DataFrame,
     keys: DataFrame,
@@ -191,15 +180,6 @@ def hll_build(
             F.shiftrightunsigned(h, w).cast("int").alias("bucket"),
             F.least(rho, F.lit(HLL_RHO_CAP)).alias("register"),
         )
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("register").alias("register"))
-    )
-
-
-def hll_merge(a: DataFrame, b: DataFrame, group_cols: tuple = ()) -> DataFrame:
-    """Register-wise max of two sketches built with the same ``p``."""
-    return (
-        a.unionByName(b)
         .groupBy(*group_cols, "bucket")
         .agg(F.max("register").alias("register"))
     )

@@ -1137,25 +1137,6 @@ def _oriented_triangles(canon: DataFrame, handles: Optional[list] = None) -> Dat
     ).select("u", "v1", "v2")
 
 
-def edge_supports(edges: DataFrame) -> DataFrame:
-    """Per-edge triangle SUPPORT over the undirected simple graph:
-    ``(a, b, support)`` for every canonical edge (a < b), where support
-    is the number of triangles the edge closes — the quantity k-truss
-    peels on.  Each triangle contributes to all three of its edges."""
-    canon = (
-        edges.select(M.SRC, M.DST)
-        .where(F.col(M.SRC) != F.col(M.DST))
-        .select(
-            F.least(M.SRC, M.DST).alias("a"),
-            F.greatest(M.SRC, M.DST).alias("b"),
-        )
-        .distinct()
-        .persist()
-    )
-    handles: list = [canon]
-    return _finish(_edge_supports_canon(canon, handles), handles)
-
-
 def _edge_supports_canon(
     canon: DataFrame, handles: Optional[list] = None
 ) -> DataFrame:

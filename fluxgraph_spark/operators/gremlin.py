@@ -1385,8 +1385,3 @@ def _apply_step(step: Step, cur, st: "_EvalState"):
     else:
         raise GremlinSyntaxError(f"unsupported step .{name}")
     return cur
-
-
-def run_on_graph(script: str, graph) -> DataFrame:
-    """Evaluate against a TemporalGraph/DataFrameGraph (current snapshot)."""
-    return run(script, graph.vertices_df(), graph.edges_df())

@@ -398,9 +398,9 @@ class DedupIndex:
                 )
                 # eager count: materializes the banding joins ONCE here
                 # (instead of lazily inside jaccard_pairs' broadcast probe —
-                # one less AQE replan surface, same fix as dedup.py's
-                # minhash entry point) and sizes the explicit broadcast
-                # decision below.
+                # one less AQE replan surface; the MinHash-LSH pipeline
+                # counts its candidates the same way) and sizes the
+                # explicit broadcast decision below.
                 cand = cand_corpus.unionByName(cand_batch).dropDuplicates().persist()
                 cached.append(cand)
                 n_cand = cand.count()

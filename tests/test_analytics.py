@@ -292,23 +292,19 @@ def test_edge_supports_and_k_truss(spark):
     have support 0 and peel immediately; a triangle hanging off the
     clique survives 3-truss but not 4-truss (CASCADING peel: losing its
     weak edges must re-lower support inside the subgraph)."""
-    from fluxgraph_spark.operators.analytics import edge_supports, k_truss
+    from fluxgraph_spark.operators.analytics import k_truss
 
     clique = [(i, j) for i in range(1, 6) for j in range(i + 1, 6)]
     tri = [(5, 10), (5, 11), (10, 11)]          # triangle sharing vertex 5
     path = [(11, 20), (20, 21)]
     edges = spark.createDataFrame(clique + tri + path, ["src", "dst"])
 
-    sup = {(r["a"], r["b"]): r["support"] for r in edge_supports(edges).collect()}
-    for e in clique:
-        assert sup[e] == 3, e
-    assert sup[(10, 11)] == 1 and sup[(5, 10)] == 1
-    assert sup[(11, 20)] == 0 and sup[(20, 21)] == 0
-
     t3 = {(r["src"], r["dst"]) for r in k_truss(edges, k=3).collect()}
     assert t3 == set(clique) | set(tri)          # path peeled, triangle kept
     t4 = {(r["src"], r["dst"]) for r in k_truss(edges, k=4).collect()}
     assert t4 == set(clique)                     # hanging triangle cascades out
+    t5 = {(r["src"], r["dst"]) for r in k_truss(edges, k=5).collect()}
+    assert t5 == set(clique)                     # clique edges: support 3
     t6 = {(r["src"], r["dst"]) for r in k_truss(edges, k=6).collect()}
     assert t6 == set()                           # 5-clique is only a 5-truss
     # k=2: support >= 0 keeps everything (canonical form)

@@ -104,15 +104,6 @@ def test_train_matches_scalar_reference(spark):
     assert _state_dict(final_state) == ref_state
 
 
-def test_apply_equals_training_state(spark):
-    """Encoding the training corpus with the learned merge list
-    reproduces the final training state exactly (the inference path)."""
-    docs = _docs(spark, WORDS_RE_TEXTS)
-    merges, final_state = bpe.bpe_train(docs, n_merges=8)
-    applied = bpe.bpe_apply(bpe.word_count_table(docs), merges)
-    assert _state_dict(applied) == _state_dict(final_state)
-
-
 def test_encode_token_counts(spark):
     texts = ["low low lower", "newest widest low"]
     docs = _docs(spark, texts)

@@ -47,7 +47,7 @@ def test_candidate_pairs_match_unbucketed(index):
         corpus.selectExpr("doc_id AS id", "text"), "id", "text", n=3
     )
     sig = dedup.minhash_signatures(sh, num_hashes=8)
-    want = _pairs_set(dedup.lsh_candidate_pairs(sig, num_hashes=8, bands=4))
+    want = _pairs_set(dedup.pairs_from_bands(dedup.band_table(sig, num_hashes=8, bands=4)))
     got = _pairs_set(idx.candidate_pairs())
     assert got == want and got
 

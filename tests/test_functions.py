@@ -84,14 +84,15 @@ def test_minhash_lsh_finds_near_dups(spark):
     )
     sh = dedup.shingle_table(df, "id", "text", n=3)
     sig = dedup.minhash_signatures(sh, num_hashes=16)
-    pairs = dedup.lsh_candidate_pairs(sig, num_hashes=16, bands=8)
+    pairs = dedup.pairs_from_bands(dedup.band_table(sig, num_hashes=16, bands=8))
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 4) in got  # identical docs always collide
     assert (1, 2) in got  # near-dup should collide in >=1 of 8 bands
-    sims = dedup.minhash_similarity(sig, pairs, 16).collect()
-    by_pair = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in sims}
-    assert by_pair[(1, 4)] == 1.0
-    assert by_pair[(1, 2)] > 0.3
+    # estimated Jaccard: the fraction of matching signature components
+    mh = {r["id"]: [r[f"mh_{i}"] for i in range(16)] for r in sig.collect()}
+    est = {p: sum(x == y for x, y in zip(mh[p[0]], mh[p[1]])) / 16 for p in got}
+    assert est[(1, 4)] == 1.0
+    assert est[(1, 2)] > 0.3
 
 
 def test_jaccard_exact(spark):
@@ -114,10 +115,11 @@ def test_simhash_near(spark):
     sim = dedup.simhash(df, "id", "text", bits=32)
     vals = {r["id"]: r["simhash"] for r in sim.collect()}
     assert all(0 <= v < 2 ** 32 for v in vals.values())
-    pairs = dedup.simhash_near_pairs(sim, max_hamming=8, prefix_bits=8)
-    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
-    if (1, 2) in got and (1, 3) in got:
-        assert got[(1, 2)] < got[(1, 3)]
+    def hamming(a, b):
+        return bin(vals[a] ^ vals[b]).count("1")
+
+    # one changed token moves few bits; an unrelated text about half
+    assert hamming(1, 2) < hamming(1, 3)
 
 
 def test_embedding_near_dup_and_topk(tables, spark):
@@ -1774,57 +1776,119 @@ def test_ngram_novelty_dedups_within_doc(spark):
     assert got["n_grams"] == 3 and got["novel_ratio"] == 1.0
 
 
+LSH_FAMILIES = {
+    # family: (public entry, the bound it takes, gram builder, signature hash)
+    "md5": (
+        dedup.minhash_lsh_dedup_reproducible, "max_candidates_per_doc",
+        dedup.shingle_array_table, None,
+    ),
+    "xxhash64": (
+        dedup.minhash_lsh_dedup, "max_bucket_size", dedup.shingle_arrays, dedup.fast_hash,
+    ),
+}
+
+
+def _lsh(df, family, **bounds):
+    """One family's MinHash-LSH pairs at the parity settings (2-grams, 8
+    hashes, 8 bands, threshold 0).  A bound the family's public entry
+    does not take runs through the shared body."""
+    entry, bound, grams, hash_fn = LSH_FAMILIES[family]
+    if set(bounds) <= {bound}:
+        out = entry(df, "doc_id", "text", n=2, num_hashes=8, bands=8, threshold=0.0, **bounds)
+    else:
+        out = dedup._minhash_lsh(
+            df, "doc_id", "text", 2, 8, 8, 0.0, grams, hash_fn, **bounds
+        )
+    return sorted(map(tuple, out.collect()))
+
+
+def _lsh_exploded(df, family, **bounds):
+    """The exploded composition of the public primitives: (id, gram)
+    rows, so each id's signature and Jaccard use the UNION of its rows'
+    grams."""
+    if family == "md5":
+        sh = dedup.shingle_table(df, "doc_id", "text", n=2)
+    else:
+        sh = dedup.shingle_arrays(df, "doc_id", "text", n=2).select(
+            "id", F.explode("shingles").alias("shingle")
+        )
+    sig = dedup.minhash_signatures(sh, num_hashes=8, hash_fn=LSH_FAMILIES[family][3])
+    cand = dedup.pairs_from_bands(dedup.band_table(sig, num_hashes=8, bands=8), **bounds)
+    return sorted(map(tuple, dedup.jaccard_pairs(sh, block=cand, threshold=0.0).collect()))
+
+
 def test_lsh_driver_tiers_match_distributed(tables, spark, monkeypatch):
-    """r13: the bounded driver tiers inside minhash_lsh_dedup_reproducible
-    (numpy candidate selection + in-process Jaccard verify) are
-    bit-identical to the distributed joins, with and without the
-    per-doc budget, at every cap combination — and duplicate ids fall
-    back to the exploded implementation with unchanged results.  NULL
+    """The bounded driver tiers of the MinHash-LSH pipeline (numpy
+    candidate selection + in-process Jaccard verify) are bit-identical
+    to the distributed joins for both hash families, with and without
+    a bound (the md5 per-doc budget, a binding hot-bucket cap), at every
+    cap combination, and equal the exploded composition of the public
+    primitives.  Duplicate ids verify the union of their grams.  NULL
     text has no grams: two NULL-text docs are never a pair."""
     docs = tables["documents"].select("doc_id", "text")
     max_id = docs.agg(F.max("doc_id")).first()[0]
     null_ids = [max_id + 1, max_id + 2]
-    docs = docs.unionByName(
-        spark.createDataFrame([(i, None) for i in null_ids], docs.schema)
-    )
+    # four copies of one new text: a bucket of four in every band
+    hot_ids = [max_id + 3 + i for i in range(4)]
+    docs = docs.unionByName(spark.createDataFrame(
+        [(i, None) for i in null_ids]
+        + [(i, "one boilerplate footer repeated on every page") for i in hot_ids],
+        docs.schema,
+    ))
 
-    def run(budget):
-        return sorted(map(tuple, dedup.minhash_lsh_dedup_reproducible(
-            docs, "doc_id", "text", n=2, num_hashes=8, bands=8,
-            threshold=0.0, max_candidates_per_doc=budget,
-        ).collect()))
-
-    for budget in (None, 3):
+    def tiers(df, family, **bounds):
+        """The pairs at each cap setting, asserted equal."""
         monkeypatch.setattr(dedup, "LSH_DRIVER_BAND_MAX", 1 << 21)
         monkeypatch.setattr(dedup, "_LSH_DRIVER_GRAMS_MAX", 1 << 24)
-        all_driver = run(budget)
+        all_driver = _lsh(df, family, **bounds)
         # distributed selection + distributed array verify
         monkeypatch.setattr(dedup, "LSH_DRIVER_BAND_MAX", 0)
-        dist_sel = run(budget)
+        dist_sel = _lsh(df, family, **bounds)
         # driver selection + distributed array verify
         monkeypatch.setattr(dedup, "LSH_DRIVER_BAND_MAX", 1 << 21)
         monkeypatch.setattr(dedup, "_LSH_DRIVER_GRAMS_MAX", 0)
-        dist_verify = run(budget)
-        assert all_driver == dist_sel == dist_verify, budget
-        # the pre-r13 exploded implementation agrees too
-        exploded = sorted(map(tuple, dedup._minhash_lsh_reproducible_exploded(
-            docs, "doc_id", "text", 2, 8, 8, 0.0, budget,
-        ).collect()))
-        assert all_driver == exploded, budget
-        assert not any(a in null_ids or b in null_ids for a, b, _ in all_driver)
+        dist_verify = _lsh(df, family, **bounds)
+        assert all_driver == dist_sel == dist_verify, (family, bounds)
+        return all_driver
 
-    # duplicate ids: union-of-grams semantics via the exploded fallback;
-    # a NULL-text duplicate adds no grams to its id
+    for family, bounds in (
+        ("md5", {}), ("md5", {"max_candidates_per_doc": 3}), ("md5", {"max_bucket_size": 2}),
+        ("xxhash64", {}), ("xxhash64", {"max_bucket_size": 2}),
+    ):
+        all_driver = tiers(docs, family, **bounds)
+        assert all_driver == _lsh_exploded(docs, family, **bounds), (family, bounds)
+        assert not any(a in null_ids or b in null_ids for a, b, _ in all_driver)
+        hot_pairs = {(a, b) for a, b, _ in all_driver if a in hot_ids and b in hot_ids}
+        if "max_bucket_size" in bounds:
+            # the cap binds: the hot bucket pairs as a star on its min id
+            assert hot_pairs == {(hot_ids[0], i) for i in hot_ids[1:]}, family
+        else:
+            assert len(hot_pairs) == 6, (family, bounds)
+            assert tiers(docs.limit(0), family, **bounds) == [], (family, bounds)
+
+    # duplicate ids: union-of-grams semantics; a NULL-text duplicate adds
+    # no grams to its id
     head = docs.orderBy("doc_id").limit(20)
     dup = head.unionByName(
         head.limit(5).withColumn("text", F.concat(F.col("text"), F.lit(" zq")))
     ).unionByName(
         head.limit(2).withColumn("text", F.lit(None).cast("string"))
     ).unionByName(docs.where(F.col("doc_id").isin(null_ids)))
-    got = sorted(map(tuple, dedup.minhash_lsh_dedup_reproducible(
-        dup, "doc_id", "text", n=2, num_hashes=8, bands=8, threshold=0.0,
-    ).collect()))
-    want = sorted(map(tuple, dedup._minhash_lsh_reproducible_exploded(
-        dup, "doc_id", "text", 2, 8, 8, 0.0, None,
-    ).collect()))
-    assert got == want
+    for family in LSH_FAMILIES:
+        got = tiers(dup, family)
+        want = _lsh_exploded(dup, family)
+        assert got == want, family
+
+
+def test_minhash_lsh_duplicate_ids_verify_union_of_grams(spark):
+    """Both hash families return ONE row per pair for an id with two
+    rows, scored on the union of that id's grams (the xxhash64 entry
+    used to verify each row separately: two rows for one pair)."""
+    t = "the quick brown fox jumps over the lazy dog near the river bank today"
+    df = spark.createDataFrame(
+        [(1, t), (2, t + " again"), (2, t + " also today")], "id long, text string"
+    )
+    for entry in (dedup.minhash_lsh_dedup, dedup.minhash_lsh_dedup_reproducible):
+        got = [tuple(r) for r in entry(df, "id", "text", bands=8, threshold=0.1).collect()]
+        # 12 shared grams of 15 in the union of id 2's rows
+        assert got == [(1, 2, 0.8)], entry.__name__

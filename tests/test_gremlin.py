@@ -189,7 +189,7 @@ def test_gremlin_over_as_of_snapshot(spark):
     import datetime
 
     from fluxgraph_spark import TemporalGraph
-    from fluxgraph_spark.operators.gremlin import run_on_graph
+    from fluxgraph_spark.operators import gremlin
 
     g = TemporalGraph.create(spark)
     a = g.add_vertex(); a.set_property("name", "alice")
@@ -199,14 +199,15 @@ def test_gremlin_over_as_of_snapshot(spark):
     c = g.add_vertex(); c.set_property("name", "carol")
     g.add_edge(None, a, c, "knows")
 
+    then = g.as_of(cut)
     now_names = sorted(
-        r[0] for r in run_on_graph(
-            f"g.v({a.id}).out('knows').values('name')", g
+        r[0] for r in gremlin.run(
+            f"g.v({a.id}).out('knows').values('name')", g.vertices_df(), g.edges_df()
         ).collect()
     )
     then_names = sorted(
-        r[0] for r in run_on_graph(
-            f"g.v({a.id}).out('knows').values('name')", g.as_of(cut)
+        r[0] for r in gremlin.run(
+            f"g.v({a.id}).out('knows').values('name')", then.vertices_df(), then.edges_df()
         ).collect()
     )
     assert now_names == ["bob", "carol"]

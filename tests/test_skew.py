@@ -1,101 +1,4 @@
-"""Salted-join/aggregation equivalence on a power-law key."""
-
-from pyspark.sql import functions as F
-
-
-def _skewed_df(spark):
-    # one hot key (0) with 50k rows, 100 cold keys with 10 each
-    hot = spark.range(0, 50_000).select(
-        F.lit(0).alias("k"), F.col("id").alias("payload")
-    )
-    cold = spark.range(0, 1_000).select(
-        (F.col("id") % 100 + 1).alias("k"), F.col("id").alias("payload")
-    )
-    return hot.unionByName(cold)
-
-
-def test_salted_join_equals_plain_join(spark):
-    from fluxgraph_spark.operators.skew import salted_join
-
-    skewed = _skewed_df(spark)
-    dim = spark.range(0, 101).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("attr")
-    )
-    plain = skewed.join(dim, "k")
-    salted = salted_join(skewed, dim, "k", n_salts=4)
-    assert salted.count() == plain.count() == 51_000
-    assert salted.exceptAll(plain).isEmpty()
-    assert plain.exceptAll(salted).isEmpty()
-
-
-def test_salted_count_equals_group_count(spark):
-    from fluxgraph_spark.operators.skew import salted_count
-
-    skewed = _skewed_df(spark)
-    got = {r["k"]: r["count"] for r in salted_count(skewed, "k", 4).collect()}
-    want = {r["k"]: r["count"] for r in skewed.groupBy("k").count().collect()}
-    assert got == want
-
-
-import contextlib
-
-from pyspark.sql import functions as F  # noqa: E402 (used by helpers below)
-
-
-@contextlib.contextmanager
-def _conf(spark, **kv):
-    old = {k: spark.conf.get(k, None) for k in kv}
-    for k, v in kv.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def _hot_rows_per_partition(df):
-    """Post-join partition histogram of the hot key's rows."""
-    hist = (
-        df.withColumn("__pid", F.spark_partition_id())
-        .where(F.col("k") == 0)
-        .groupBy("__pid")
-        .count()
-        .collect()
-    )
-    return {r["__pid"]: r["count"] for r in hist}
-
-
-def test_salted_join_spreads_hot_key_where_aqe_does_not(spark):
-    """The regime AQE's skew split does NOT cover: a broadcast-ineligible
-    dim and a hot partition far below skewedPartitionThresholdInBytes
-    (256 MB) — the unsalted sort-merge join lands every hot-key row in
-    ONE reducer partition; salted_join spreads them."""
-    from fluxgraph_spark.operators.skew import salted_join
-
-    skewed = _skewed_df(spark)
-    dim = spark.range(0, 101).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("attr")
-    )
-    with _conf(
-        spark,
-        **{
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-            "spark.sql.adaptive.enabled": "false",
-        },
-    ):
-        plain_hist = _hot_rows_per_partition(skewed.join(dim, "k"))
-        salted_hist = _hot_rows_per_partition(salted_join(skewed, dim, "k", n_salts=8))
-    # unsalted: one pathological reducer holds ALL 50k hot rows
-    assert len(plain_hist) == 1
-    assert max(plain_hist.values()) == 50_000
-    # salted: hot key spread over several reducers, none holding the bulk
-    assert len(salted_hist) >= 2
-    assert max(salted_hist.values()) <= 30_000
-    assert sum(salted_hist.values()) == 50_000
+"""Hot-key skew guards: the LSH hot-bucket star cap."""
 
 
 def _hot_bucket_corpus(spark):
@@ -119,10 +22,9 @@ def test_lsh_hot_bucket_cap_star_fallback(spark):
     sh = dedup.shingle_table(docs, "doc_id", "text", n=3)
     sig = dedup.minhash_signatures(sh, num_hashes=16)
 
-    uncapped = dedup.lsh_candidate_pairs(sig, num_hashes=16, bands=4)
-    capped = dedup.lsh_candidate_pairs(
-        sig, num_hashes=16, bands=4, max_bucket_size=50
-    )
+    banded = dedup.band_table(sig, num_hashes=16, bands=4)
+    uncapped = dedup.pairs_from_bands(banded)
+    capped = dedup.pairs_from_bands(banded, max_bucket_size=50)
     n_uncapped = uncapped.count()
     n_capped = capped.count()
     assert n_uncapped >= 120 * 119 // 2  # quadratic blow-up is real

@@ -5,12 +5,16 @@ bounded collect.  These pins count the Spark jobs a decision submits
 (``statusTracker`` job ids under a job group), so a change to how the
 tiers collect keeps running the same actions.  The counts are the ones
 the hand-rolled collects ran before they moved behind
-``local_relation.bounded_arrow``, except where a test says why not."""
+``local_relation.bounded_arrow``, except where a test says why not.
+The md5 MinHash-LSH and ``DedupIndex.dedupe_batch`` pins were taken
+before the two hash families shared one pipeline; only the duplicate-id
+count changed with it."""
 
 import datetime
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
 from fluxgraph_spark import TemporalGraph
 from fluxgraph_spark import local_relation as LR
@@ -20,17 +24,23 @@ from fluxgraph_spark.operators import gremlin as GL
 
 
 def jobs(spark, fn):
-    """(fn(), number of Spark jobs fn submitted)."""
+    """(fn(), number of Spark jobs fn submitted).  Jobs submitted from an
+    engine pool thread carry no job group (a thread does not inherit
+    it), so they count as the ungrouped jobs that started during fn."""
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    last = max(tracker.getJobIdsForGroup(None), default=-1)
     group = f"tier-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         out = fn()
     finally:
         sc.setJobGroup(None, None)
-    # job events reach the status store through the async listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    pooled = [j for j in tracker.getJobIdsForGroup(None) if j > last]
+    return out, len(tracker.getJobIdsForGroup(group)) + len(pooled)
 
 
 @pytest.fixture
@@ -160,3 +170,71 @@ def test_ivf_centroid_collect_jobs(spark):
     # incremental take, two jobs over these four in-memory partitions
     assert n == 1
     assert sorted(map(tuple, out.collect())) == [(1, 3), (2, 0)]
+
+
+@pytest.fixture(scope="module")
+def lsh_docs(spark):
+    from fluxgraph_spark.sources.tpch import read_tables
+
+    return read_tables(spark, "/root/testdata/sf0.001")["documents"].select("doc_id", "text")
+
+
+# (LSH_DRIVER_BAND_MAX, _LSH_DRIVER_GRAMS_MAX) per tier setting
+LSH_SETTINGS = {
+    "all_driver": (1 << 21, 1 << 19),
+    "driver_selection": (1 << 21, 0),
+    "distributed": (0, 1 << 19),
+}
+
+
+def _lsh_jobs(spark, monkeypatch, run):
+    counts = {}
+    for setting, (band_max, grams_max) in LSH_SETTINGS.items():
+        monkeypatch.setattr(dedup, "LSH_DRIVER_BAND_MAX", band_max)
+        monkeypatch.setattr(dedup, "_LSH_DRIVER_GRAMS_MAX", grams_max)
+        out, counts[setting] = jobs(spark, run)
+        assert out.count() > 0, setting
+    return counts
+
+
+@pytest.mark.parametrize("budget", [None, 3])
+def test_lsh_reproducible_jobs(spark, lsh_docs, monkeypatch, budget):
+    """The md5 pipeline in each tier setting, with and without a budget."""
+    counts = _lsh_jobs(spark, monkeypatch, lambda: dedup.minhash_lsh_dedup_reproducible(
+        lsh_docs, "doc_id", "text", n=2, num_hashes=8, bands=8,
+        threshold=0.0, max_candidates_per_doc=budget,
+    ))
+    want = {"all_driver": 10, "driver_selection": 12, "distributed": 17}
+    if budget is not None:
+        want["distributed"] = 18  # the budget windows add one exchange
+    assert counts == want
+
+
+def test_lsh_duplicate_ids_jobs(spark, lsh_docs, monkeypatch):
+    dup = lsh_docs.unionByName(
+        lsh_docs.orderBy("doc_id").limit(5).withColumn("text", F.concat("text", F.lit(" zq")))
+    )
+    counts = _lsh_jobs(spark, monkeypatch, lambda: dedup.minhash_lsh_dedup_reproducible(
+        dup, "doc_id", "text", n=2, num_hashes=8, bands=8, threshold=0.0,
+    ))
+    # one regroup of the gram arrays on top of the unique-id counts (the
+    # exploded pipeline these inputs used to take ran 24 in every setting)
+    assert counts == {"all_driver": 12, "driver_selection": 14, "distributed": 19}
+
+
+def test_dedupe_batch_jobs(spark, lsh_docs, tmp_path):
+    from fluxgraph_spark.sources import bucketed
+
+    db = "flux_tier_jobs_idx"
+    bucketed.ensure_database(spark, db, str(tmp_path / "warehouse"))
+    try:
+        corpus = lsh_docs.where(F.col("doc_id") % 5 != 0)
+        batch = lsh_docs.where(F.col("doc_id") % 5 == 0)
+        idx = bucketed.DedupIndex.build(
+            corpus, "doc_id", "text", f"{db}.corpus",
+            n=3, num_hashes=8, bands=4, n_buckets=4,
+        )
+        out, n = jobs(spark, lambda: idx.dedupe_batch(batch, corpus, "doc_id", "text"))
+        assert n == 28 and out.count() > 0
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
