@@ -243,14 +243,13 @@ class FluxSparkVertex(TimeAwareElement):
         (reference FluxVertex.java:130-148)."""
         facts = super().get_facts()
         for edge in self.get_edges(BOTH):
-            in_v = edge.get_vertex(IN)
-            out_v = edge.get_vertex(OUT)
+            row = edge._require_row()  # one read for both endpoints and the label
             facts.add((edge.id, ":graph.element/type", ":graph.element.type/edge"))
-            facts.add((in_v.id, ":graph.element/type", ":graph.element.type/vertex"))
-            facts.add((edge.id, ":graph.edge/inVertex", in_v.id))
-            facts.add((out_v.id, ":graph.element/type", ":graph.element.type/vertex"))
-            facts.add((edge.id, ":graph.edge/outVertex", out_v.id))
-            facts.add((edge.id, ":graph.edge/label", edge.get_label()))
+            facts.add((row["dst"], ":graph.element/type", ":graph.element.type/vertex"))
+            facts.add((edge.id, ":graph.edge/inVertex", row["dst"]))
+            facts.add((row["src"], ":graph.element/type", ":graph.element.type/vertex"))
+            facts.add((edge.id, ":graph.edge/outVertex", row["src"]))
+            facts.add((edge.id, ":graph.edge/label", row["label"]))
         return facts
 
 

@@ -27,6 +27,7 @@ carry the codec functions inside the serialized task).
 from __future__ import annotations
 
 import hashlib
+import itertools
 from typing import Iterator
 
 import pandas as pd
@@ -253,8 +254,8 @@ def video_table_from_documents(
 
         for pdf in it:
             ids, types, contents, metas = [], [], [], []
-            for _, row in pdf.iterrows():
-                text = row["text"] or ""
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
+                text = text or ""
                 raw = text.encode("utf-8")
                 dur_ms = len(text) * 17 % 5000 + 1000
                 n_frames = max(1, dur_ms // 1000)
@@ -263,7 +264,7 @@ def video_table_from_documents(
                     digest = _hashlib.md5(raw + bytes([i % 256])).digest()
                     px = np.frombuffer(digest * (npix // 16), dtype=np.uint8)
                     frames.append(px.reshape(height, width, 3).copy())
-                ids.append(row["doc_id"])
+                ids.append(did)
                 types.append("video")
                 contents.append(encode_avi(frames, fps=1.0))
                 metas.append(
@@ -315,8 +316,8 @@ def mjpeg_video_table_from_documents(
 
         for pdf in it:
             ids, types, contents, metas = [], [], [], []
-            for _, row in pdf.iterrows():
-                text = row["text"] or ""
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
+                text = text or ""
                 raw = text.encode("utf-8")
                 dur_ms = len(text) * 17 % 5000 + 1000
                 n_frames = max(1, dur_ms // 1000)
@@ -326,7 +327,7 @@ def mjpeg_video_table_from_documents(
                     frames.append(
                         np.full((height, width), digest[0], dtype=np.uint8)
                     )
-                ids.append(row["doc_id"])
+                ids.append(did)
                 types.append("video")
                 contents.append(encode_avi(frames, fps=1.0, codec="mjpeg"))
                 metas.append(
@@ -386,8 +387,8 @@ def msvideo1_video_table_from_documents(
 
         for pdf in it:
             ids, types, contents, metas = [], [], [], []
-            for _, row in pdf.iterrows():
-                text = row["text"] or ""
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
+                text = text or ""
                 raw = text.encode("utf-8")
                 dur_ms = len(text) * 17 % 5000 + 1000
                 n_frames = max(1, dur_ms // 1000)
@@ -401,7 +402,7 @@ def msvideo1_video_table_from_documents(
                     f[:, : width // 2] = left
                     f[:, width // 2 :] = right
                     frames.append(f)
-                ids.append(row["doc_id"])
+                ids.append(did)
                 types.append("video")
                 contents.append(encode_avi(frames, fps=1.0, codec="msvideo1"))
                 metas.append(
@@ -455,8 +456,8 @@ def adpcm_audio_table_from_documents(
 
         for pdf in it:
             ids, types, contents, metas = [], [], [], []
-            for _, row in pdf.iterrows():
-                text = row["text"] or ""
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
+                text = text or ""
                 raw = text.encode("utf-8")
                 n_blocks = len(text) % 7 + 2
                 sig = np.empty((n_blocks * spb, n_channels), dtype=np.int16)
@@ -465,7 +466,7 @@ def adpcm_audio_table_from_documents(
                         d = _hashlib.md5(raw + mark + bytes([j])).digest()
                         amp = ((d[0] << 8) | d[1]) - 32768
                         sig[j * spb : (j + 1) * spb, c] = amp
-                ids.append(row["doc_id"])
+                ids.append(did)
                 types.append("audio")
                 contents.append(
                     encode_wav(
@@ -519,12 +520,12 @@ def audio_block_means(media: DataFrame, samples_per_block: int) -> DataFrame:
 
         for pdf in it:
             ids, idxs, ls, rs = [], [], [], []
-            for _, row in pdf.iterrows():
-                _rate, n_ch, samples = decode_wav(row["content"])
+            for mid, content in zip(pdf["media_id"], pdf["content"]):
+                _rate, n_ch, samples = decode_wav(content)
                 n_frames = samples.shape[0]
                 if n_frames % samples_per_block:
                     raise ValueError(
-                        f"media {row['media_id']}: {n_frames} frames is "
+                        f"media {mid}: {n_frames} frames is "
                         f"not a multiple of {samples_per_block}"
                     )
                 blocks = samples.reshape(-1, samples_per_block, n_ch)
@@ -532,7 +533,7 @@ def audio_block_means(media: DataFrame, samples_per_block: int) -> DataFrame:
                     blocks.astype(np.float64).mean(axis=1) + 0.5
                 ).astype(np.int64)
                 for j in range(blocks.shape[0]):
-                    ids.append(row["media_id"])
+                    ids.append(mid)
                     idxs.append(j)
                     ls.append(int(means[j, 0]))
                     rs.append(int(means[j, 1] if n_ch > 1 else means[j, 0]))
@@ -569,14 +570,16 @@ def sample_frames(media: DataFrame, every_ms: int = 1000, decoder: str = "fake")
 
         for pdf in it:
             ids, idxs, feats = [], [], []
-            for _, row in pdf.iterrows():
+            # only the fake decoder reads meta
+            metas = itertools.repeat(None) if decoder == "real" else pdf["meta"]
+            for mid, content, meta in zip(pdf["media_id"], pdf["content"], metas):
                 if decoder == "real":
-                    fps, frames = decode_avi(row["content"])
+                    fps, frames = decode_avi(content)
                     step = max(1, int(round(every_ms * fps / 1000.0)))
                     for i in range(0, len(frames), step):
                         fr = frames[i].astype(np.float64)
                         h, w, _c = fr.shape
-                        ids.append(row["media_id"])
+                        ids.append(mid)
                         idxs.append(i)
                         feats.append(
                             [
@@ -591,11 +594,11 @@ def sample_frames(media: DataFrame, every_ms: int = 1000, decoder: str = "fake")
                             ]
                         )
                     continue
-                dur = (row["meta"] or {}).get("duration_ms") or 0
+                dur = (meta or {}).get("duration_ms") or 0
                 n_frames = max(1, int(dur // every_ms))
                 for i in range(n_frames):
-                    digest = hashlib.md5((row["content"] or b"") + bytes([i % 256])).digest()
-                    ids.append(row["media_id"])
+                    digest = hashlib.md5((content or b"") + bytes([i % 256])).digest()
+                    ids.append(mid)
                     idxs.append(i)
                     feats.append([b / 255.0 for b in digest[:8]])
             yield pd.DataFrame(

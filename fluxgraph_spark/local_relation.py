@@ -14,6 +14,14 @@ localRelationThreshold`` (48 MB by default) and as a JVM-side RDD of the
 Arrow batches above it.  Neither runs a Python worker; a python-list
 ``createDataFrame`` is a pickled Python RDD that does, on every action.
 
+The frame :func:`local_dataframe` returns holds its row count: its
+``count()`` and ``isEmpty()`` answer from the Arrow table with no Spark
+job (Spark folds Project, Filter and Limit over a local relation, but
+plans ``count()`` as an aggregate that runs its jobs).  Only that frame
+holds it: every transformation of it (``where``, ``select``, ``alias``,
+joins, ...) is a plain ``DataFrame`` whose count Spark computes, while
+``cache()``/``persist()`` return the frame itself, rows unchanged.
+
 Values mean what ``createDataFrame(<rows>, schema)`` made of them:
 
 * naive ``datetime`` in a ``TimestampType`` column is process-local
@@ -34,6 +42,7 @@ from urllib.parse import urlparse
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.pandas.types import to_arrow_type
 
 # wide enough for any decimal(38, s) value plus its scale
@@ -130,7 +139,23 @@ def local_dataframe(
             [_arrow_column(vals, f.dataType) for vals, f in zip(data, schema.fields)],
             names=schema.names,
         )
-    return spark.createDataFrame(data, schema)
+    df = spark.createDataFrame(data, schema)
+    if type(df) is ClassicDataFrame:
+        df.__class__ = _HeldCountDataFrame
+        df._held_rows = data.num_rows
+    return df
+
+
+class _HeldCountDataFrame(ClassicDataFrame):
+    """A classic DataFrame over a local relation of ``_held_rows`` rows."""
+
+    _held_rows: int
+
+    def count(self) -> int:
+        return self._held_rows
+
+    def isEmpty(self) -> bool:
+        return self._held_rows == 0
 
 
 def _arrow_column(values: Sequence[Any], dtype: T.DataType) -> pa.Array:

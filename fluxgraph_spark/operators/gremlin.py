@@ -778,8 +778,8 @@ def _tier_collect_graph(vertices: DataFrame, edges: DataFrame):
     vids = vtbl.column(M.ID).to_numpy(zero_copy_only=False).astype(np.int64)
     if np.unique(vids).size != vids.size:
         return None  # duplicate vertex ids: join multiplicity not modeled
-    e3 = e.select(M.SRC, M.DST, M.LABEL)
-    etbl = bounded_arrow(e3, ecap, rows=e3.count)
+    # e's count: a store view answers it with no job
+    etbl = bounded_arrow(e.select(M.SRC, M.DST, M.LABEL), ecap, rows=e.count)
     if etbl is None:
         return None
     src = etbl.column(0)

@@ -239,8 +239,8 @@ def read_graph_elements(
         cols = [f.name for f in ELEMENT_SCHEMA.fields]
         for pdf in it:
             rows: List[_ROW] = []
-            for _, row in pdf.iterrows():
-                rows.extend(parse(row["path"], bytes(row["content"])))
+            for path, content in zip(pdf["path"], pdf["content"]):
+                rows.extend(parse(path, bytes(content)))
             yield pd.DataFrame(rows, columns=cols)
 
     return files.mapInPandas(batches, schema=ELEMENT_SCHEMA)

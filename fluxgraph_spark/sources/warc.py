@@ -263,13 +263,13 @@ def read_warc(
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in it:
             rows = {k.name: [] for k in WARC_SCHEMA.fields}
-            for _, row in pdf.iterrows():
-                for headers, payload in parse_warc(bytes(row["content"])):
+            for path, content in zip(pdf["path"], pdf["content"]):
+                for headers, payload in parse_warc(bytes(content)):
                     h = {k.lower(): v for k, v in headers.items()}
                     rt = h.get("warc-type", "")
                     if record_type is not None and rt != record_type:
                         continue
-                    rows["warc_file"].append(row["path"])
+                    rows["warc_file"].append(path)
                     rows["record_type"].append(rt)
                     rows["url"].append(h.get("warc-target-uri"))
                     rows["warc_date"].append(h.get("warc-date"))

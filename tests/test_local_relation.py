@@ -1,6 +1,7 @@
 """The Arrow local-relation helpers.  ``local_dataframe``: values
 identical to what a python-list ``createDataFrame`` made of the same
-data, plans without a Python RDD, and no way around it.
+data, plans without a Python RDD, a held row count equal to Spark's,
+and no way around it.
 ``bounded_arrow``/``integral``: the driver tiers' collect gates, and no
 hand-rolled collect or environment knob beside them."""
 
@@ -10,8 +11,11 @@ import decimal
 import os
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 import fluxgraph_spark
 from fluxgraph_spark import TemporalGraph
@@ -295,3 +299,79 @@ def test_bounded_arrow_file_proof_runs_no_job(spark, monkeypatch, tmp_path):
         sc.setJobGroup(None, None)
     monkeypatch.setattr(LR, "_PROBE_ROW_BYTES", 512)
     assert bounded_arrow(df, 40, file_rows=True).num_rows == 40
+
+
+HELD_SCHEMA = T.StructType(
+    [T.StructField("id", T.LongType(), True), T.StructField("s", T.StringType(), True)]
+)
+HELD_INPUTS = {
+    "empty": [[], []],
+    "all_null": [[None] * 4, [None] * 4],
+    "duplicate_rows": [[7, 7, 7, 8], ["x", "x", "x", None]],
+    "distinct": [list(range(300)), [f"s{i}" for i in range(300)]],
+}
+
+
+def spark_count(df):
+    """``df``'s count as Spark computes it (a projection is a plain
+    DataFrame with the same rows)."""
+    return df.select(*df.columns).count()
+
+
+def test_held_count_equals_spark_count(spark):
+    for name, columns in HELD_INPUTS.items():
+        df = local_dataframe(spark, columns, HELD_SCHEMA)
+        want = spark_count(df)
+        assert want == len(columns[0]), name
+        assert df.count() == want, name
+        assert df.isEmpty() == (want == 0) == df.select(*df.columns).isEmpty(), name
+        # an Arrow table in, not value lists
+        arrow = pa.table(columns, schema=to_arrow_schema(HELD_SCHEMA))
+        tbl = local_dataframe(spark, arrow, HELD_SCHEMA)
+        assert tbl.count() == want and tbl.isEmpty() == (want == 0), name
+
+
+def test_held_count_above_local_relation_threshold(spark):
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1")
+        for name, columns in HELD_INPUTS.items():
+            df = local_dataframe(spark, columns, HELD_SCHEMA)
+            if columns[0]:
+                assert "LocalTableScan" not in plan_and_lineage(df), name
+            assert df.count() == spark_count(df) == len(columns[0]), name
+            assert df.isEmpty() == (not columns[0]), name
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_transformations_drop_the_held_count(spark):
+    df = local_dataframe(spark, HELD_INPUTS["duplicate_rows"], HELD_SCHEMA)
+    assert type(df) is not DataFrame and isinstance(df, DataFrame)
+    derived = {
+        "where": (df.where(F.col("id") == 8), 1),
+        "select": (df.select("s"), 4),
+        "distinct": (df.distinct(), 2),
+        "alias": (df.alias("a"), 4),
+        "limit": (df.limit(2), 2),
+        "join": (df.alias("a").join(df.alias("b"), "id"), 10),
+        "union": (df.union(df), 8),
+    }
+    for name, (out, rows) in derived.items():
+        assert type(out) is DataFrame, name
+        assert out.count() == rows, name
+    # an empty result of a non-empty frame is not empty by the held count
+    assert df.where(F.col("id") < 0).isEmpty()
+
+
+def test_persist_keeps_the_held_count(spark):
+    df = local_dataframe(spark, HELD_INPUTS["duplicate_rows"], HELD_SCHEMA)
+    try:
+        assert df.persist() is df and df.cache() is df
+        assert df.is_cached
+        assert df.count() == spark_count(df) == 4
+        assert df.collect() == df.select(*df.columns).collect()
+    finally:
+        assert df.unpersist() is df
+    assert df.count() == 4

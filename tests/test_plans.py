@@ -115,3 +115,21 @@ def test_bucketed_graph_hop_shuffles_only_frontier(spark, tmp_path):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         for tbl in ("bg_test_vertices", "bg_test_edges_out", "bg_test_edges_in"):
             spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+def test_committed_after_plans_show_full_lineage():
+    """Committed after-plans are taken with ``profile_query.py
+    --no-ckpt-plans``: they show the lineage under every checkpoint, not
+    a scan of the checkpoint's RDD."""
+    import glob
+    import os
+
+    plans = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans")
+    after = glob.glob(os.path.join(plans, "*", "*_after.txt"))
+    assert after
+    found = []
+    for path in after:
+        with open(path) as f:
+            if "at localCheckpoint" in f.read():
+                found.append(os.path.relpath(path, plans))
+    assert not found, found

@@ -7,7 +7,8 @@ algorithms the engine used before (walk an element's full history, walk
 every edge row, scan every tx time, filter the full-history relation
 with ``temporal.snapshot``); on seeded random histories with backdated
 writes, self-loops and the zero-length vertex row ``remove_vertex``
-writes, both must return the same rows, in the same order, at every tx."""
+writes, both must return the same rows, in the same order, at every tx.
+``get_facts`` is checked against facts built from scanned rows alone."""
 
 import datetime
 import random
@@ -119,6 +120,32 @@ def scan_next_chain(store, kind, eid, tx):
         pins.append(tx)
 
 
+def scan_facts(store, kind, eid, tx):
+    """``get_facts()`` of element ``eid`` at ``tx`` from scanned rows; None
+    when it does not exist there."""
+    row = scan_version_at(store, kind, eid, tx)
+    if row is None:
+        return None
+    facts = {(eid, ":graph.element/type", f":graph.element.type/{kind}")}
+    for col, val in row["props"].items():
+        if val is not None:
+            text = ("true" if val else "false") if isinstance(val, bool) else str(val)
+            facts.add((eid, col, text))
+    edges = [row] if kind == M.EDGE_KIND else [
+        scan_version_at(store, M.EDGE_KIND, e, tx)
+        for e in scan_vertex_edges(store, eid, tx, BOTH, ())
+    ]
+    for edge in edges:
+        if kind == M.VERTEX_KIND:
+            facts.add((edge["id"], ":graph.element/type", ":graph.element.type/edge"))
+        for end in ("src", "dst"):
+            facts.add((edge[end], ":graph.element/type", ":graph.element.type/vertex"))
+        facts.add((edge["id"], ":graph.edge/inVertex", edge["dst"]))
+        facts.add((edge["id"], ":graph.edge/outVertex", edge["src"]))
+        facts.add((edge["id"], ":graph.edge/label", edge["label"]))
+    return facts
+
+
 def scan_resolve_checkpoint(tx_times, t):
     best = 0
     for tx, tt in tx_times.items():
@@ -216,6 +243,31 @@ def test_indexed_store_matches_scans(seed):
 
     for t in resolve_probes(g._tx_times):
         assert g.resolve_checkpoint(t) == scan_resolve_checkpoint(g._tx_times, t)
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_get_facts_match_scans(seed):
+    """Vertex and edge facts, pinned to every tx, read under a graph
+    checkpoint, and current."""
+    g = random_graph(seed)
+    store = g._store
+    removed = [e for e in store._e_index if scan_version_at(store, M.EDGE_KIND, e, None) is None]
+    assert removed, "no removed edge"
+    for tx in [None] + list(range(store.max_tx + 2)):
+        g._checkpoint_tx = tx
+        for cls, kind, ids in (
+            (FluxSparkVertex, M.VERTEX_KIND, store._v_index),
+            (FluxSparkEdge, M.EDGE_KIND, store._e_index),
+        ):
+            for eid in ids:
+                want = scan_facts(store, kind, eid, tx)
+                for el in (cls(g, eid, tx), cls(g, eid)):
+                    if want is None:
+                        with pytest.raises(ValueError, match="does not exist"):
+                            el.get_facts()
+                    else:
+                        assert el.get_facts() == want, (kind, eid, tx)
+    g._checkpoint_tx = None
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])

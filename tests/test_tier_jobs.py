@@ -8,7 +8,8 @@ the hand-rolled collects ran before they moved behind
 ``local_relation.bounded_arrow``, except where a test says why not.
 The md5 MinHash-LSH and ``DedupIndex.dedupe_batch`` pins were taken
 before the two hash families shared one pipeline; only the duplicate-id
-count changed with it."""
+count changed with it.  Frames built by ``local_relation.local_dataframe``
+(store views, tier outputs) answer ``count()`` with no job."""
 
 import datetime
 import uuid
@@ -115,10 +116,12 @@ def test_gremlin_loop_tier_jobs(spark, toy_graph, monkeypatch):
     v_df, e_df = g.vertices_df(), g.edges_df()
     m = vs["marko"].id
     monkeypatch.setattr(GL, "GREMLIN_DRIVER_EDGE_MAX", 1 << 21)
-    # the whole prefix replays: the vertex and edge collects, count-first
+    # the whole prefix replays: the vertex and edge collects, count-first;
+    # both counts are the store views' held counts (7 jobs when each ran
+    # Spark's two-job aggregate)
     script = f"g.v({m}).out.loop(1){{it.object.lang != 'java'}}.values('name')"
     out, n = jobs(spark, lambda: GL.run(script, v_df, e_df))
-    assert n == 7
+    assert n == 3
     assert sorted(r[0] for r in out.collect()) == ["lop", "lop", "ripple"]
     # a frontier from Spark: the graph collects, then the frontier collect
     calls = []
@@ -128,7 +131,7 @@ def test_gremlin_loop_tier_jobs(spark, toy_graph, monkeypatch):
     )
     script = f"g.v({m}).outE.inV.out.loop(1){{it.object.lang != 'java'}}.values('name')"
     out, n = jobs(spark, lambda: GL.run(script, v_df, e_df))
-    assert n == 12
+    assert n == 8  # 12 with the two counts run by Spark
     assert sorted(r[0] for r in out.collect()) == ["lop", "ripple"]
     assert calls
 
@@ -238,3 +241,19 @@ def test_dedupe_batch_jobs(spark, lsh_docs, tmp_path):
         assert n == 28 and out.count() > 0
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_store_view_count_jobs(spark, toy_graph):
+    g, vs, _ = toy_graph
+    cut = max(g._tx_times.values())
+    g.set_transaction_time(cut + datetime.timedelta(days=1))
+    vs["marko"].set_property("age", 30)
+    g.add_vertex()
+    view = g.as_of(cut).vertices_df()
+    # an as-of store view answers count() from the rows it holds
+    assert jobs(spark, view.count) == (6, 0)
+    assert jobs(spark, view.isEmpty) == (False, 0)
+    # a transformation of it is counted by Spark
+    older = view.where(F.col("id") != vs["marko"].id)
+    out, n = jobs(spark, older.count)
+    assert out == 5 and n >= 1
